@@ -5,9 +5,12 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Methodology (recorded in BASELINE.md): each query is materialized via the
 noop sink (full execution, no driver collect); one unmeasured warm pass at
 the MEASURED scale factor (JIT + codegen + file-index + shuffle services),
-then REPS measured runs per query with the per-query MEDIAN reported —
-single-sample noise (GC pause, page-cache miss) was the whole story of the
-round-2 regression, so the artifact now owns the noise model.
+then REPS measured passes, interleaved over the list, with the per-query
+MIN reported (host steal only ever adds time, so the minimum is the robust
+estimate). The skew_replay pair reports the median of its REPS
+steady-state samples instead. Single-sample noise (GC pause, page-cache
+miss) was the whole story of the round-2 regression, so the artifact owns
+the noise model.
 """
 
 from __future__ import annotations

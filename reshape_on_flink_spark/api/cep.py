@@ -3470,11 +3470,14 @@ class PatternStream:
                 python_stage_width,
             )
 
-            # ONE width for both cogroup inputs (sized by the larger,
-            # per-row-scanned side): mismatched capped widths made
+            # ONE width for both cogroup inputs (the wider of the two
+            # sides' widths): mismatched capped widths made
             # EnsureRequirements re-shuffle one side — an extra
             # exchange in the r14 skip plan
-            n_cg = python_stage_width(ev, task_bytes=PYTHON_STAGE_TASK_BYTES)
+            n_cg = max(
+                python_stage_width(side, task_bytes=PYTHON_STAGE_TASK_BYTES)
+                for side in (ev, asg)
+            )
             kcols = [F.col(c) for c in keys]
             return (
                 asg.repartition(n_cg, *kcols)

@@ -20,6 +20,7 @@ Scale defaults (tuned for the 100 TB target, harmless at test SF):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -112,13 +113,42 @@ PYTHON_STAGE_TASK_BYTES = int(
     os.environ.get("RESHAPE_PY_STAGE_TASK_BYTES", 256 * 1024)
 )
 
-#: Never cap the fan-out below this many partitions: a wrong-low
-#: optimizer estimate (post-filter selectivity guesses) must not
-#: serialize a genuinely heavy Python stage — 1-2 partitions is the
-#: exact failure the pin exists to prevent.
+#: Never cap the fan-out below this many partitions (or below the
+#: scheduler's task slots, if there are fewer): a wrong-low optimizer
+#: estimate (post-filter selectivity guesses) must not serialize a
+#: genuinely heavy Python stage — 1-2 partitions is the exact failure
+#: the pin exists to prevent. The floor is ``min(this, task_slots)``
+#: because every Python task pays a fixed worker setup cost whatever
+#: its input: on CPython 3.11, ``setup_spark_files`` calls
+#: ``importlib.invalidate_caches()``, which re-reads the directories of
+#: ``pyspark.zip`` and the Spark core jar once for each of their cached
+#: zipimporters (16 of them), 0.14-0.38 s per task measured inside the
+#: workers on a 4-core box (CPython 3.13 made that re-read lazy). A
+#: floor above the slot count adds no parallelism, only a second wave
+#: of that fixed cost: 8 tasks on 4 slots run as two waves.
 PYTHON_STAGE_MIN_PARTITIONS = int(
     os.environ.get("RESHAPE_PY_STAGE_MIN_PARTITIONS", 8)
 )
+
+#: SparkContext -> its concurrent task slots, read once (task_slots).
+_TASK_SLOTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def task_slots(spark: SparkSession) -> int:
+    """The scheduler's concurrent task slots: N under ``local[N]``, the
+    registered executors' total cores (over ``spark.task.cpus``) on a
+    cluster. Read once per SparkContext; 0 — no executor registered
+    yet — is returned but not remembered."""
+    sc = spark.sparkContext
+    n = _TASK_SLOTS.get(sc)
+    if n is None:
+        jsc = sc._jsc.sc()
+        n = int(jsc.maxNumConcurrentTasks(
+            jsc.resourceProfileManager().defaultResourceProfile()
+        ))
+        if n > 0:
+            _TASK_SLOTS[sc] = n
+    return n
 
 
 def repartition_for_python_stage(
@@ -148,7 +178,13 @@ def repartition_for_python_stage(
     plan/flag/numpy setup, measured 1.2-1.9x faster at sf0.1 when the
     fan-out tracks input size) pass ``task_bytes`` to additionally cap
     the width at ``ceil(estimated_bytes / task_bytes)``, floored at
-    :data:`PYTHON_STAGE_MIN_PARTITIONS`. The cap self-removes at scale
+    ``min(PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark))``. The floor
+    never exceeds the task slots because each Python task pays a fixed
+    worker setup (0.14-0.38 s per task on CPython 3.11: the zipimport
+    directory re-read described at :data:`PYTHON_STAGE_MIN_PARTITIONS`);
+    on 4 slots a floor of 8 ran every small stage as two waves of that
+    cost and bought no parallelism, so a small stage now runs in one
+    wave. The cap self-removes at scale
     (a 10x input estimate re-opens the full configured width) and on
     estimate failure (unknown/huge sizeInBytes ⇒ full width), so it is
     a small-input overhead bound, not a parallelism limit. Stages whose
@@ -181,13 +217,14 @@ def python_stage_width(df: DataFrame, *, task_bytes: int | None = None) -> int:
             est = int(
                 str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
             )
-            if 0 < est < n * task_bytes:
-                n = min(n, max(
-                    PYTHON_STAGE_MIN_PARTITIONS,
-                    -(-est // task_bytes),
-                ))
         except Exception:
-            pass  # no estimate -> keep the configured width
+            est = 0  # no estimate -> keep the configured width
+        if 0 < est < n * task_bytes:
+            floor = min(
+                PYTHON_STAGE_MIN_PARTITIONS,
+                task_slots(spark) or PYTHON_STAGE_MIN_PARTITIONS,
+            )
+            n = min(n, max(floor, -(-est // task_bytes)))
     return n
 
 

@@ -49,7 +49,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -109,6 +109,7 @@ class ReshapeController:
 
     conf: ReshapeConf
     hot_keys: dict = field(default_factory=dict)  # key value -> _HotKey
+    iterations: int = 0  # observe() calls past the freq_ms rate limit
     _last_update: float = 0.0
 
     def routing(self) -> dict:
@@ -138,6 +139,7 @@ class ReshapeController:
         if self._last_update and (now - self._last_update) * 1000 < self.conf.freq_ms:
             return
         self._last_update = now
+        self.iterations += 1
         if total_rows <= 0:
             return
         task_mean = total_rows / self.conf.parallelism
@@ -189,7 +191,7 @@ def salted_partial_merge_agg(
     salt_map = F.create_map(
         *[x for k, n in routing.items() for x in (F.lit(k), F.lit(int(n)))]
     )
-    n_salts = F.coalesce(salt_map.getItem(F.col(key_col)), F.lit(1))
+    n_salts = F.coalesce(salt_map[F.col(key_col)], F.lit(1))
     salt = F.pmod(F.hash(F.col(spread_col)), n_salts)
     partial = (
         df.withColumn("_salt", salt)
@@ -230,6 +232,17 @@ def keyed_process_agg(
     (hash(spread_col) pmod n_salts sub-keys, partial process per
     sub-key, exact merge) is a real wall-clock win — benched as
     ``skew_process_plain`` vs ``skew_process_reshape``.
+
+    Both the plain and the salted keyed stage are size-capped
+    (``task_bytes=PYTHON_STAGE_TASK_BYTES``, like the CEP scans): the
+    Python work per group is two pandas calls (``len``, ``sum``), so on
+    a streaming micro-batch the stage's cost is the fixed per-task
+    worker setup, not a per-row replay. Pinned to
+    ``spark.sql.shuffle.partitions`` (8 on 4 cores) every micro-batch
+    paid that setup in two waves; capped, a small micro-batch runs in
+    one wave of at most ``task_slots`` tasks. A large micro-batch's
+    estimate re-opens the configured width, so salting still spreads
+    a hot key over reducers at scale.
     """
     import pandas as pd
 
@@ -243,11 +256,16 @@ def keyed_process_agg(
             "sum_value": [float(pdf[value_col].sum())],
         })
 
-    from reshape_on_flink_spark.session import repartition_for_python_stage
+    from reshape_on_flink_spark.session import (
+        PYTHON_STAGE_TASK_BYTES,
+        repartition_for_python_stage,
+    )
 
     if not routing:
         return (
-            repartition_for_python_stage(df, key_col)
+            repartition_for_python_stage(
+                df, key_col, task_bytes=PYTHON_STAGE_TASK_BYTES
+            )
             .groupBy(key_col)
             .applyInPandas(agg_fn, out_schema)
         )
@@ -255,7 +273,7 @@ def keyed_process_agg(
     salt_map = F.create_map(
         *[x for k, n in routing.items() for x in (F.lit(k), F.lit(int(n)))]
     )
-    n_salts = F.coalesce(salt_map.getItem(F.col(key_col)), F.lit(1))
+    n_salts = F.coalesce(salt_map[F.col(key_col)], F.lit(1))
     partial_schema = f"{key_col} {key_type}, _salt int, cnt long, sum_value double"
 
     def partial_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -270,6 +288,7 @@ def keyed_process_agg(
         repartition_for_python_stage(
             df.withColumn("_salt", F.pmod(F.hash(F.col(spread_col)), n_salts)),
             [key_col, "_salt"],
+            task_bytes=PYTHON_STAGE_TASK_BYTES,
         )
         .groupBy(key_col, "_salt")
         .applyInPandas(partial_fn, partial_schema)
@@ -283,7 +302,11 @@ def keyed_process_agg(
 
 
 def observe_candidates(
-    merged: DataFrame, key_col: str, conf: ReshapeConf, tracked: dict
+    merged: DataFrame,
+    key_col: str,
+    conf: ReshapeConf,
+    tracked: dict,
+    total: int | None = None,
 ) -> tuple[int, dict]:
     """Distributed, bounded load observation for the controller.
 
@@ -304,8 +327,13 @@ def observe_candidates(
     the driver. This is what makes the control loop viable at 100 TB:
     the reference's controller likewise receives only per-*subtask*
     busyRatios (O(parallelism)), never per-key stats.
+
+    ``total`` is the sum of ``cnt`` when the caller already has it (an
+    ``Observation`` on the write that produced ``merged``); None sums it
+    with a Spark job of its own.
     """
-    total = merged.agg(F.sum("cnt").alias("t")).collect()[0]["t"] or 0
+    if total is None:
+        total = merged.agg(F.sum("cnt").alias("t")).collect()[0]["t"] or 0
     if total <= 0:
         return 0, {}
     floor = conf.lo_threshold * (total / conf.parallelism)
@@ -341,7 +369,11 @@ class PartialUpsertSink:
       cleanup is best-effort garbage collection: ``write()`` skips and
       ``result_df()`` filters out partial epochs ≤ the committed
       watermark, so leftover folded partials are inert. Called
-      automatically every ``compact_every`` epochs.
+      automatically every ``compact_every`` epochs. Cleanup spares the
+      partials of epochs ``>= keep_from`` (folded, so inert, but still
+      readable by ``read_epoch``): an observer that reads an epoch back
+      after ``write()`` sets it so the compaction that epoch triggers
+      does not delete the partial before the observer reads it.
 
     On-disk layout::
 
@@ -369,6 +401,9 @@ class PartialUpsertSink:
         self.compact_every = compact_every
         self.merge_spec = dict(merge_spec) if merge_spec else None
         self._epochs_since_compact = 0
+        # first epoch whose partial an observer has yet to read back;
+        # None: no observer, cleanup deletes every folded partial
+        self.keep_from: int | None = None
 
     @property
     def _partials(self) -> str:
@@ -406,20 +441,25 @@ class PartialUpsertSink:
             if d.startswith("epoch=")
         )
 
-    def write(self, merged: DataFrame, epoch_id: int) -> None:
+    def write(self, merged: DataFrame, epoch_id: int) -> bool:
+        """Store the epoch's partial; False (nothing run) for a replay
+        of an epoch already folded into the snapshot."""
         if int(epoch_id) <= self._compacted_through():
-            return  # replay of an epoch already folded into the snapshot
+            return False
         merged.write.mode("overwrite").parquet(
             os.path.join(self._partials, f"epoch={int(epoch_id)}")
         )
         self._epochs_since_compact += 1
         if self._epochs_since_compact >= self.compact_every:
             self.compact()
+        return True
 
     def read_epoch(self, epoch_id: int) -> DataFrame | None:
-        """The merged partial a given epoch wrote (None if skipped as a
-        replay). Reading the just-written small parquet back is the cheap
-        way to observe per-key load without re-running the aggregation's
+        """The merged partial a given epoch wrote, also after compaction
+        folded it while ``keep_from`` spared it (None once the partial
+        is gone: not written yet, or folded and garbage-collected).
+        Reading the just-written small parquet back is the cheap way to
+        observe per-key load without re-running the aggregation's
         lineage or persisting it."""
         d = os.path.join(self._partials, f"epoch={int(epoch_id)}")
         if not os.path.isdir(d):
@@ -479,8 +519,11 @@ class PartialUpsertSink:
         os.replace(tmp, self._current)
         if old_snap is not None:
             shutil.rmtree(old_snap, ignore_errors=True)
+        keep_from = self.keep_from
         for e in self._partial_epochs():
-            if e <= new_through:  # folded now, or stale from a crashed cleanup
+            # folded now, or stale from a crashed cleanup; spared while
+            # an observer has yet to read it back
+            if e <= new_through and (keep_from is None or e < keep_from):
                 shutil.rmtree(os.path.join(self._partials, f"epoch={e}"), ignore_errors=True)
         self._epochs_since_compact = 0
 
@@ -594,17 +637,23 @@ class ReshapeStreamingAgg:
         if self.sink is not None:
             # scale path: the idempotent upsert write materializes the
             # merged partial anyway, so the controller observes by
-            # reading that small parquet back (2 tiny jobs per tick,
-            # amortized by freq_ms) — the aggregation lineage is never
-            # re-run and nothing key-shaped reaches the driver
-            self.sink.write(agg, epoch_id)
+            # reading that small parquet back (one tiny job per tick,
+            # amortized by freq_ms; the row total rides on the write as
+            # an Observation) — the aggregation lineage is never re-run
+            # and nothing key-shaped reaches the driver
             if observe_now:
-                written = self.sink.read_epoch(epoch_id)
-                if written is not None:  # None: epoch was a skipped replay
-                    total, candidates = observe_candidates(
-                        written, self.key_col, self.conf, self.controller.hot_keys
-                    )
-                    self.controller.observe(candidates, total)
+                rows_seen = Observation()
+                agg = agg.observe(rows_seen, F.sum("cnt").alias("total"))
+            if self.conf.observation == "inline":
+                # spare this epoch's partial from the compaction its own
+                # write may trigger, so it can be read back below
+                self.sink.keep_from = epoch_id
+            if self.sink.write(agg, epoch_id) and observe_now:
+                total, candidates = observe_candidates(
+                    self.sink.read_epoch(epoch_id), self.key_col, self.conf,
+                    self.controller.hot_keys, total=rows_seen.get["total"] or 0,
+                )
+                self.controller.observe(candidates, total)
         else:
             # dict mode (tests/bench): the merged result is collected
             # anyway, so the observation is derived from those rows for
@@ -642,6 +691,8 @@ class ReshapeStreamingAgg:
                     "(the MetricStore analog); pass sink=PartialUpsertSink(...)"
                 )
             name = f"reshape_{uuid.uuid4().hex[:12]}"
+            # compaction spares every partial until the listener has read it
+            self.sink.keep_from = 0
             self.listener = ReshapeProgressListener(self, name)
             stream_df.sparkSession.streams.addListener(self.listener)
             writer = writer.queryName(name)
@@ -691,16 +742,17 @@ class ReshapeProgressListener(_SQL):
         if p.name != self._query_name:
             return
         agg = self._agg
-        if not (agg.conf.enabled and agg.controller.due()):
-            return
-        written = agg.sink.read_epoch(p.batchId)
-        if written is None:  # replayed/skipped epoch: nothing new to read
-            return
-        total, candidates = observe_candidates(
-            written, agg.key_col, agg.conf, agg.controller.hot_keys
-        )
-        agg.controller.observe(candidates, total)
-        self.ticks += 1
+        if agg.conf.enabled and agg.controller.due():
+            written = agg.sink.read_epoch(p.batchId)
+            if written is None:  # replay of a collected epoch: nothing to read
+                return
+            total, candidates = observe_candidates(
+                written, agg.key_col, agg.conf, agg.controller.hot_keys
+            )
+            agg.controller.observe(candidates, total)
+            self.ticks += 1
+        # epochs up to this one are read: compaction may collect them
+        agg.sink.keep_from = p.batchId + 1
 
     def onQueryIdle(self, event):  # noqa: N802
         pass

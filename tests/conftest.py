@@ -43,6 +43,12 @@ _HEAVY_PATTERNS = ("streaming",)  # within the nfa_itcase replay matrix
 _HEAVY_PATTERN_FILES = {"test_cep_nfa_itcase.py"}
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running soak test (heavy tier)"
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("RESHAPE_RUN_HEAVY"):
         return

@@ -1535,13 +1535,16 @@ def test_python_stage_partitions_pinned(spark):
 def test_python_stage_pin_cap_scales_with_input(spark):
     """The round-14 size cap on repartition_for_python_stage: a small
     estimated input pins to the floor (not 1-2, not the full configured
-    width); a large estimated input re-opens the configured width."""
+    width) — min(PYTHON_STAGE_MIN_PARTITIONS, task slots), so a small
+    stage runs in one wave; a large estimated input re-opens the
+    configured width."""
     from pyspark.sql import functions as F
 
     from reshape_on_flink_spark.session import (
         PYTHON_STAGE_MIN_PARTITIONS,
         PYTHON_STAGE_TASK_BYTES,
         repartition_for_python_stage,
+        task_slots,
     )
 
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -1549,7 +1552,7 @@ def test_python_stage_pin_cap_scales_with_input(spark):
     n_small = repartition_for_python_stage(
         small, "k", task_bytes=PYTHON_STAGE_TASK_BYTES
     ).rdd.getNumPartitions()
-    assert n_small == min(n_conf, PYTHON_STAGE_MIN_PARTITIONS)
+    assert n_small == min(n_conf, PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark))
     # without task_bytes (per-ROW-cost stages) the width stays configured
     n_def = repartition_for_python_stage(small, "k").rdd.getNumPartitions()
     assert n_def == n_conf
@@ -1560,6 +1563,34 @@ def test_python_stage_pin_cap_scales_with_input(spark):
         big, "k", task_bytes=PYTHON_STAGE_TASK_BYTES
     ).rdd.getNumPartitions()
     assert n_big == n_conf
+
+
+def test_python_stage_floor_capped_at_task_slots(spark, monkeypatch):
+    """The small-input floor never exceeds the scheduler's task slots (a
+    second wave of per-task Python setup buys no parallelism); more
+    slots than PYTHON_STAGE_MIN_PARTITIONS keep the floor, and a
+    cluster with no executor registered yet (0 slots) keeps it too."""
+    from pyspark.sql import functions as F
+
+    from reshape_on_flink_spark import session
+    from reshape_on_flink_spark.session import (
+        PYTHON_STAGE_MIN_PARTITIONS,
+        PYTHON_STAGE_TASK_BYTES,
+        python_stage_width,
+    )
+
+    master = spark.sparkContext.master  # local[N]: N slots
+    assert session.task_slots(spark) == int(master[len("local["):-1])
+    small = spark.range(0, 1000).select((F.col("id") % 97).alias("k"))
+    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for slots, want in (
+        (3, 3),
+        (64, PYTHON_STAGE_MIN_PARTITIONS),
+        (0, PYTHON_STAGE_MIN_PARTITIONS),
+    ):
+        monkeypatch.setattr(session, "task_slots", lambda _s, n=slots: n)
+        got = python_stage_width(small, task_bytes=PYTHON_STAGE_TASK_BYTES)
+        assert got == min(n_conf, want), (slots, got)
 
 
 def test_retractable_topn_order_by_list_equals_synthetic_seq(spark):

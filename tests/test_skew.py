@@ -113,6 +113,30 @@ class TestSaltedAgg:
         assert plain == relational
         assert routed == relational
 
+        # a small routed input runs its keyed stage at the capped width
+        # (the one-wave floor), not at spark.sql.shuffle.partitions, and
+        # stays exactly equal to the groupBy
+        import re
+
+        from reshape_on_flink_spark.session import (
+            PYTHON_STAGE_MIN_PARTITIONS,
+            task_slots,
+        )
+
+        key = "spark.sql.shuffle.partitions"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "32")
+        try:
+            out = keyed_process_agg(df, "key", "value", {0: 10, 3: 4}, "id")
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            widths = re.findall(r"hashpartitioning\(key#\d+L?, _salt#\d+, (\d+)\)", plan)
+            assert widths == [
+                str(min(PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark)))
+            ], plan
+            assert snap(out) == relational
+        finally:
+            spark.conf.set(key, saved)
+
     def test_process_engine_streaming_equals_relational(self, spark, tmp_dir):
         """ReshapeStreamingAgg(engine='process') over a chunked zipf
         replay with the controller ON == the relational engine's results
@@ -482,6 +506,58 @@ class TestControllerOnSkewedStream:
         got = {
             r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
             for r in sink2.result_df().collect()
+        }
+        assert got == expected
+
+
+    @pytest.mark.parametrize("observation", ["inline", "listener"])
+    def test_controller_observes_compaction_epochs(self, spark, tmp_dir, observation):
+        """With freq_ms=0 every epoch is due, including the ones whose
+        own write triggers a compaction (compact_every=2: epochs 1 and
+        3), which folds and would delete the partial the controller
+        reads back. One controller iteration per micro-batch, in both
+        observation modes, and the sink stays exact."""
+        import time
+
+        from reshape_on_flink_spark.sources.readers import datagen
+        from reshape_on_flink_spark.streaming.source import chunked_replay
+
+        df = datagen(spark, 8_000, n_keys=50, skew_hot_share=0.5).select(
+            F.col("id").alias("event_id"),
+            F.col("key").alias("user_id"),
+            F.col("value"),
+            F.timestamp_millis(F.col("id") * 1000).alias("ts"),
+        )
+        sink = PartialUpsertSink(
+            spark, os.path.join(tmp_dir, "upsert"), "user_id", compact_every=2
+        )
+        agg = ReshapeStreamingAgg(
+            "user_id", "value", "event_id",
+            ReshapeConf(enabled=True, parallelism=8, freq_ms=0, observation=observation),
+            sink=sink,
+        )
+        stream = chunked_replay(spark, df, os.path.join(tmp_dir, "replay"), n_chunks=4)
+        try:
+            agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(180)
+            # listener progress events arrive asynchronously — poll
+            deadline = time.time() + 60
+            while time.time() < deadline and agg.controller.iterations < agg.batches_seen:
+                time.sleep(0.5)
+        finally:
+            if agg.listener is not None:
+                spark.streams.removeListener(agg.listener)
+        assert agg.batches_seen == 4
+        assert sink._compacted_through() == 3  # epochs 1 and 3 compacted
+        assert agg.controller.iterations == agg.batches_seen
+        expected = {
+            r["user_id"]: (r["cnt"], round(r["sv"], 4))
+            for r in df.groupBy("user_id")
+            .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
+            .collect()
+        }
+        got = {
+            r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
+            for r in sink.result_df().collect()
         }
         assert got == expected
 
