@@ -24,19 +24,6 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: Engine configuration mirroring the reference's Reshape knobs
-#: (README.md:15-23, ControllerSimulator.scala:19-51 of the reference).
-#: Consumed by reshape_on_flink_spark.streaming.reshape.
-RESHAPE_DEFAULTS = {
-    "reshape.enabled": "false",
-    "reshape.hiThreshold": "0.8",
-    "reshape.loThreshold": "0.2",
-    "reshape.freqMs": "10000",
-    "reshape.firstPhaseNum": "6",
-    "reshape.firstPhaseRatio": "0.9",
-}
-
-
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -93,8 +80,6 @@ def get_spark(
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")
-    for k, v in RESHAPE_DEFAULTS.items():
-        builder = builder.config(f"spark.{k}", v)
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 class ReshapeConf:
     """Mirrors the reference's knobs (README.md:15-23 of the reference)."""
 
-    enabled: bool = True
+    enabled: bool = False  # enableReShape: off unless asked for
     hi_threshold: float = 0.8  # hiThreshold: key share of task capacity => skewed
     lo_threshold: float = 0.2  # loThreshold: cool-down share
     freq_ms: int = 10_000  # reshapeFreq: controller iteration period
@@ -65,32 +65,23 @@ class ReshapeConf:
     first_phase_ratio: float = 0.9  # reroute 90 of every 100 records
     parallelism: int = 32  # stand-in for subtask count
     max_salts: int = 64
-    # observation source: "inline" (observe inside process_batch, from
-    # the merged aggregate the pipeline computes anyway) or "listener"
-    # (a StreamingQueryListener polls the upsert sink on progress events
-    # — the out-of-band control plane of the reference's JobMaster
-    # timer, ControllerSimulator.scala:52-94)
-    observation: str = "inline"
 
     @classmethod
     def from_spark_conf(cls, spark) -> "ReshapeConf":
+        """Read the ``spark.reshape.*`` keys; an unset key keeps the
+        field default above."""
+        d = cls()
         g = spark.conf.get
         return cls(
-            enabled=g("spark.reshape.enabled", "false") == "true",
-            hi_threshold=float(g("spark.reshape.hiThreshold", "0.8")),
-            lo_threshold=float(g("spark.reshape.loThreshold", "0.2")),
-            freq_ms=int(g("spark.reshape.freqMs", "10000")),
-            first_phase_num=int(g("spark.reshape.firstPhaseNum", "6")),
-            first_phase_ratio=float(g("spark.reshape.firstPhaseRatio", "0.9")),
-            observation=g("spark.reshape.observation", "inline"),
+            enabled=g("spark.reshape.enabled", str(d.enabled)).lower() == "true",
+            hi_threshold=float(g("spark.reshape.hiThreshold", str(d.hi_threshold))),
+            lo_threshold=float(g("spark.reshape.loThreshold", str(d.lo_threshold))),
+            freq_ms=int(g("spark.reshape.freqMs", str(d.freq_ms))),
+            first_phase_num=int(g("spark.reshape.firstPhaseNum", str(d.first_phase_num))),
+            first_phase_ratio=float(
+                g("spark.reshape.firstPhaseRatio", str(d.first_phase_ratio))
+            ),
         )
-
-    def __post_init__(self):
-        if self.observation not in ("inline", "listener"):
-            raise ValueError(
-                f"spark.reshape.observation must be 'inline' or "
-                f"'listener', got {self.observation!r}"
-            )
 
 
 @dataclass
@@ -104,7 +95,7 @@ class ReshapeController:
     """Driver-side feedback controller (the ControllerSimulator analog).
 
     Holds the sticky hot-key -> salt-count routing table and updates it
-    from per-key load observations at most once per ``freq_ms``.
+    from per-key load samples at most once per ``freq_ms``.
     """
 
     conf: ReshapeConf
@@ -118,7 +109,7 @@ class ReshapeController:
     def due(self) -> bool:
         """True if the next observe() would run (freq_ms window elapsed).
 
-        Callers that must pay a Spark job to produce the observation
+        Callers that must pay a Spark job to produce the load sample
         (``observe_candidates``) check this first so rate-limited ticks
         cost nothing — the ControllerSimulator analog only samples
         busyRatio once per ``reshapeFreq`` too.
@@ -135,10 +126,9 @@ class ReshapeController:
         ``observe_candidates``. Tracked keys absent from ``key_counts``
         cool down exactly as if they had count 0.
         """
-        now = time.monotonic()
-        if self._last_update and (now - self._last_update) * 1000 < self.conf.freq_ms:
+        if not self.due():
             return
-        self._last_update = now
+        self._last_update = time.monotonic()
         self.iterations += 1
         if total_rows <= 0:
             return
@@ -308,7 +298,7 @@ def observe_candidates(
     tracked: dict,
     total: int | None = None,
 ) -> tuple[int, dict]:
-    """Distributed, bounded load observation for the controller.
+    """Distributed, bounded per-key load sample for the controller.
 
     Input is the *merged* per-key aggregate of the current micro-batch
     (one row per key, ``cnt`` column), i.e. the result the pipeline
@@ -347,11 +337,11 @@ def observe_candidates(
 class PartialUpsertSink:
     """Cluster-scale merge target: per-epoch partial parquet + merge-on-read.
 
-    The driver-side dict in ``ReshapeStreamingAgg`` is a test
-    convenience; at 100 TB the cumulative keyed result can't live on the
-    driver. This sink implements the standard upsert pattern on plain
-    parquet (on a real deployment the same calls map 1:1 onto a Delta /
-    Iceberg ``MERGE INTO`` in ``foreachBatch``):
+    At 100 TB the cumulative keyed result can't live on the driver, so
+    ``ReshapeStreamingAgg`` always merges into this sink. It implements
+    the standard upsert pattern on plain parquet (on a real deployment
+    the same calls map 1:1 onto a Delta / Iceberg ``MERGE INTO`` in
+    ``foreachBatch``):
 
     - ``write(merged, epoch_id)``: writes the batch's merged per-key
       partials to ``partials/epoch=<id>`` with dynamic overwrite — a
@@ -371,9 +361,10 @@ class PartialUpsertSink:
       watermark, so leftover folded partials are inert. Called
       automatically every ``compact_every`` epochs. Cleanup spares the
       partials of epochs ``>= keep_from`` (folded, so inert, but still
-      readable by ``read_epoch``): an observer that reads an epoch back
-      after ``write()`` sets it so the compaction that epoch triggers
-      does not delete the partial before the observer reads it.
+      readable by ``read_epoch``): ``ReshapeStreamingAgg.process_batch``,
+      the inline observer, sets it to the epoch it is writing, so the
+      compaction that write triggers spares the partial the observer
+      reads back right after.
 
     On-disk layout::
 
@@ -401,7 +392,7 @@ class PartialUpsertSink:
         self.compact_every = compact_every
         self.merge_spec = dict(merge_spec) if merge_spec else None
         self._epochs_since_compact = 0
-        # first epoch whose partial an observer has yet to read back;
+        # the epoch the inline observer is writing and will read back;
         # None: no observer, cleanup deletes every folded partial
         self.keep_from: int | None = None
 
@@ -528,6 +519,18 @@ class PartialUpsertSink:
         self._epochs_since_compact = 0
 
 
+def _start_foreach_batch(stream_df: DataFrame, process, checkpoint_dir: str):
+    """Drain ``stream_df`` (availableNow) through ``process(batch_df,
+    epoch_id)``, checkpointed at ``checkpoint_dir``."""
+    return (
+        stream_df.writeStream.outputMode("update")
+        .foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def attach_upsert(
     stream_df: DataFrame,
     sink: PartialUpsertSink,
@@ -545,32 +548,25 @@ def attach_upsert(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sink.write(partial_fn(batch_df), epoch_id)
 
-    return (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream_df, process, checkpoint_dir)
 
 
 class ReshapeStreamingAgg:
     """Streaming grouped aggregation with the Reshape control loop.
 
     Runs as ``foreachBatch``: each micro-batch is aggregated via
-    salted_partial_merge_agg under the controller's current (sticky)
-    routing table; the controller then observes per-key load *from that
-    already-computed merged aggregate* — via ``observe_candidates``, so
-    only the bounded heavy-hitter candidate set ever reaches the driver
-    — and updates the routing for subsequent batches (rate-limited to
+    salted_partial_merge_agg (or keyed_process_agg) under the
+    controller's current (sticky) routing table and written to the
+    ``PartialUpsertSink`` (per-epoch idempotent parquet upsert,
+    merge-on-read, periodic compaction — the Delta-MERGE analog). The
+    controller then observes per-key load inline, *from the partial
+    that write just stored* — via ``observe_candidates``, so only the
+    bounded heavy-hitter candidate set ever reaches the driver — and
+    updates the routing for subsequent batches (rate-limited to
     freq_ms, two-phase schedule). Observing the output of the
-    aggregation the pipeline runs anyway costs zero extra shuffles.
-
-    Merge target: pass ``sink=PartialUpsertSink(...)`` for the
-    cluster-scale path (per-epoch idempotent parquet upsert,
-    merge-on-read, periodic compaction — the Delta-MERGE analog).
-    Without a sink, results accumulate in a driver-side dict — a test
-    convenience only, sized to the fixture key space.
+    aggregation the pipeline runs anyway costs zero extra shuffles, and
+    because observing and routing both run on the micro-batch thread, the
+    routing table never changes while a batch reads it.
     """
 
     def __init__(
@@ -579,7 +575,7 @@ class ReshapeStreamingAgg:
         value_col: str,
         spread_col: str,
         conf: ReshapeConf,
-        sink: PartialUpsertSink | None = None,
+        sink: PartialUpsertSink,
         engine: str = "relational",
     ):
         if engine not in ("relational", "process"):
@@ -597,25 +593,9 @@ class ReshapeStreamingAgg:
         # keyed applyInPandas stage (no map-side combine — the Flink
         # keyed-stream analog where the reroute genuinely pays).
         self.engine = engine
-        if sink is None:
-            # driver-side dict mode is test/bench-only: per-key results
-            # accumulate in driver memory, which is unbounded in the key
-            # cardinality. Loud by default so a production topology can't
-            # silently ship without the upsert sink.
-            import warnings
-
-            warnings.warn(
-                "ReshapeStreamingAgg without a PartialUpsertSink collects "
-                "per-key aggregates to the driver — test/bench convenience "
-                "only; pass sink=PartialUpsertSink(...) for the scale path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
         self.controller = ReshapeController(conf)
-        self.results: dict = {}  # key -> (cnt, sum)
         self.batches_seen = 0
         self.routing_history: list[dict] = []
-        self.listener: "ReshapeProgressListener | None" = None
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         routing = self.controller.routing() if self.conf.enabled else {}
@@ -627,135 +607,27 @@ class ReshapeStreamingAgg:
         agg = agg_impl(
             batch_df, self.key_col, self.value_col, routing, self.spread_col
         )
-        # listener mode: observation runs out-of-band on progress events
-        # (ReshapeProgressListener) — the data path never observes
-        observe_now = (
-            self.conf.enabled
-            and self.conf.observation == "inline"
-            and self.controller.due()
-        )
-        if self.sink is not None:
-            # scale path: the idempotent upsert write materializes the
-            # merged partial anyway, so the controller observes by
-            # reading that small parquet back (one tiny job per tick,
-            # amortized by freq_ms; the row total rides on the write as
-            # an Observation) — the aggregation lineage is never re-run
-            # and nothing key-shaped reaches the driver
-            if observe_now:
-                rows_seen = Observation()
-                agg = agg.observe(rows_seen, F.sum("cnt").alias("total"))
-            if self.conf.observation == "inline":
-                # spare this epoch's partial from the compaction its own
-                # write may trigger, so it can be read back below
-                self.sink.keep_from = epoch_id
-            if self.sink.write(agg, epoch_id) and observe_now:
-                total, candidates = observe_candidates(
-                    self.sink.read_epoch(epoch_id), self.key_col, self.conf,
-                    self.controller.hot_keys, total=rows_seen.get["total"] or 0,
-                )
-                self.controller.observe(candidates, total)
-        else:
-            # dict mode (tests/bench): the merged result is collected
-            # anyway, so the observation is derived from those rows for
-            # free — zero extra Spark jobs, same controller inputs
-            rows = agg.collect()
-            if observe_now:
-                counts = {r[self.key_col]: r["cnt"] for r in rows}
-                self.controller.observe(counts, sum(counts.values()))
-            for r in rows:
-                k = r[self.key_col]
-                cnt, sv = self.results.get(k, (0, 0.0))
-                self.results[k] = (cnt + r["cnt"], sv + (r["sum_value"] or 0.0))
+        # the idempotent upsert write materializes the merged partial
+        # anyway, so the controller observes by reading that small
+        # parquet back (one tiny job per tick, amortized by freq_ms; the
+        # row total rides on the write as an Observation) — the
+        # aggregation lineage is never re-run and nothing key-shaped
+        # reaches the driver
+        observe_now = self.conf.enabled and self.controller.due()
+        if observe_now:
+            rows_seen = Observation()
+            agg = agg.observe(rows_seen, F.sum("cnt").alias("total"))
+        # spare this epoch's partial from the compaction its own write
+        # may trigger, so it can be read back below
+        self.sink.keep_from = epoch_id
+        if self.sink.write(agg, epoch_id) and observe_now:
+            total, candidates = observe_candidates(
+                self.sink.read_epoch(epoch_id), self.key_col, self.conf,
+                self.controller.hot_keys, total=rows_seen.get["total"] or 0,
+            )
+            self.controller.observe(candidates, total)
         self.batches_seen += 1
 
     def attach(self, stream_df: DataFrame, checkpoint_dir: str):
-        """Start the streaming query with this aggregator as the sink.
-
-        ``conf.observation == "listener"`` registers a
-        :class:`ReshapeProgressListener` (stored on ``self.listener``;
-        the caller owns ``spark.streams.removeListener`` on teardown).
-        The query gets a unique name so the listener only reacts to its
-        own progress events."""
-        import uuid
-
-        writer = (
-            stream_df.writeStream.outputMode("update")
-            .foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-        )
-        if self.conf.enabled and self.conf.observation == "listener":
-            if self.sink is None:
-                raise ValueError(
-                    "listener-driven observation polls the upsert sink "
-                    "(the MetricStore analog); pass sink=PartialUpsertSink(...)"
-                )
-            name = f"reshape_{uuid.uuid4().hex[:12]}"
-            # compaction spares every partial until the listener has read it
-            self.sink.keep_from = 0
-            self.listener = ReshapeProgressListener(self, name)
-            stream_df.sparkSession.streams.addListener(self.listener)
-            writer = writer.queryName(name)
-        return writer.start()
-
-
-try:  # StreamingQueryListener needs a live JVM bridge at import in some
-    from pyspark.sql.streaming import StreamingQueryListener as _SQL
-except ImportError:  # pragma: no cover - pyspark always ships it
-    _SQL = object
-
-
-class ReshapeProgressListener(_SQL):
-    """Listener-driven controller observation — the control-plane analog
-    of the reference's JobMaster timer polling the MetricFetcher
-    (ControllerSimulator.scala:52-94 schedules the poll;
-    createSubtaskBackPressureInfo:157-172 reads per-subtask input counts
-    from the MetricStore). Here the poll source is the
-    ``StreamingQueryListener`` progress event and the "metric store" is
-    the PartialUpsertSink's just-written per-epoch partial: on each
-    ``onQueryProgress`` for the attached query (and at most once per
-    ``freq_ms``, the reshapeFreq analog) the listener reads that small
-    parquet back, reduces it to the bounded heavy-hitter candidate set
-    (``observe_candidates``) and feeds one controller iteration.
-
-    The data path (``process_batch``) never observes in this mode — the
-    controller thread and the micro-batch thread share only the routing
-    dict (single atomic reference swap per iteration, same coupling the
-    reference has between the JobMaster timer and the running workers).
-
-    Enable with ``spark.reshape.observation=listener`` /
-    ``ReshapeConf(observation="listener")``; requires the upsert sink.
-    The owner removes the listener via ``spark.streams.removeListener``
-    after the query terminates.
-    """
-
-    def __init__(self, agg: "ReshapeStreamingAgg", query_name: str):
-        self._agg = agg
-        self._query_name = query_name
-        self.ticks = 0  # controller iterations driven by this listener
-
-    def onQueryStarted(self, event):  # noqa: N802 (listener API casing)
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        p = event.progress
-        if p.name != self._query_name:
-            return
-        agg = self._agg
-        if agg.conf.enabled and agg.controller.due():
-            written = agg.sink.read_epoch(p.batchId)
-            if written is None:  # replay of a collected epoch: nothing to read
-                return
-            total, candidates = observe_candidates(
-                written, agg.key_col, agg.conf, agg.controller.hot_keys
-            )
-            agg.controller.observe(candidates, total)
-            self.ticks += 1
-        # epochs up to this one are read: compaction may collect them
-        agg.sink.keep_from = p.batchId + 1
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        pass
+        """Start the streaming query with this aggregator as the sink."""
+        return _start_foreach_batch(stream_df, self.process_batch, checkpoint_dir)

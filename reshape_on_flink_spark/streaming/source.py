@@ -57,6 +57,9 @@ def chunked_replay(
         df.repartitionByRange(n_chunks, F.col(order_col))
         .withColumn("_chunk", F.spark_partition_id() + F.lit(1))
         .write.partitionBy("_chunk")
+        # one file per chunk even under a session-wide
+        # spark.sql.files.maxRecordsPerFile (0 = unlimited)
+        .option("maxRecordsPerFile", 0)
         .mode("overwrite")
         .parquet(os.path.join(out_dir, "chunks"))
     )
@@ -78,9 +81,14 @@ def chunked_replay(
                     "overwrite"
                 ).parquet(empty)
             src = empty
-        part = next(f for f in sorted(os.listdir(src)) if f.endswith(".parquet"))
+        parts = [f for f in os.listdir(src) if f.endswith(".parquet")]
+        if len(parts) != 1:
+            raise ValueError(
+                f"chunk {i} of {out_dir} holds {len(parts)} parquet files, "
+                "expected 1: replaying one would drop or reorder rows"
+            )
         dst = os.path.join(flat, f"{i:03d}.parquet")
-        shutil.copy(os.path.join(src, part), dst)
+        shutil.copy(os.path.join(src, parts[0]), dst)
         # FileStreamSource orders batches by modification time; rapid copies
         # collide at ms resolution, scrambling replay order — stamp strictly
         # increasing mtimes so chunk i is always micro-batch i

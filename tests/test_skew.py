@@ -57,6 +57,18 @@ class TestController:
         c.observe({}, 0)  # within freq window: ignored
         assert "a" in c.routing()
 
+    def test_conf_from_spark_conf_keeps_field_defaults(self, spark):
+        keys = {"spark.reshape.enabled": "true", "spark.reshape.freqMs": "250"}
+        try:
+            for k, v in keys.items():
+                spark.conf.set(k, v)
+            got = ReshapeConf.from_spark_conf(spark)
+        finally:
+            for k in keys:
+                spark.conf.unset(k)
+        assert got == ReshapeConf(enabled=True, freq_ms=250)
+        assert ReshapeConf.from_spark_conf(spark) == ReshapeConf()
+
 
 class TestSaltedAgg:
     def test_exact_vs_plain_agg(self, spark, tables):
@@ -140,36 +152,42 @@ class TestSaltedAgg:
     def test_process_engine_streaming_equals_relational(self, spark, tmp_dir):
         """ReshapeStreamingAgg(engine='process') over a chunked zipf
         replay with the controller ON == the relational engine's results
-        (and the controller engages on the hot key)."""
-        import os
-
+        == the batch groupBy (and the controller engages on the hot key)."""
         from reshape_on_flink_spark.sources.readers import datagen
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
         df = datagen(spark, 20_000, n_keys=40, skew_hot_share=0.5).select(
             "id", "key", "value"
         )
-        results = {}
+        expected = {
+            r["key"]: (r["cnt"], round(r["sv"], 6))
+            for r in df.groupBy("key")
+            .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
+            .collect()
+        }
         for engine in ("relational", "process"):
             replay = os.path.join(tmp_dir, f"pe_{engine}")
             ckpt = os.path.join(tmp_dir, f"pe_{engine}_ckpt")
             stream = chunked_replay(spark, df, replay, n_chunks=4,
                                     order_col="id")
-            with pytest.warns(RuntimeWarning):  # sink-less driver-dict mode
-                agg = ReshapeStreamingAgg(
-                    "key", "value", "id",
-                    ReshapeConf(enabled=True, parallelism=8, freq_ms=0),
-                    engine=engine,
-                )
+            sink = PartialUpsertSink(
+                spark, os.path.join(tmp_dir, f"pe_{engine}_sink"), "key"
+            )
+            agg = ReshapeStreamingAgg(
+                "key", "value", "id",
+                ReshapeConf(enabled=True, parallelism=8, freq_ms=0),
+                sink=sink, engine=engine,
+            )
             q = agg.attach(stream, ckpt)
             q.awaitTermination(120)
-            results[engine] = {
-                k: (c, round(s, 6)) for k, (c, s) in agg.results.items()
+            got = {
+                r["key"]: (r["cnt"], round(r["sum_value"], 6))
+                for r in sink.result_df().collect()
             }
+            assert got == expected, engine
             assert any(0 in r for r in agg.routing_history), (
                 f"{engine}: controller never engaged on the hot key"
             )
-        assert results["process"] == results["relational"]
 
     def test_spread_improvement_on_skewed_keys(self, spark):
         """The point of the mechanism: a hot key that would land on one
@@ -200,15 +218,22 @@ class TestSaltedAgg:
         assert salted < unsalted / 2   # salting spreads it
 
     def test_streaming_reshape_agg_end_to_end(self, spark, tables, tmp_dir):
+        """Four micro-batches of the events replay through the controller
+        into a sink that never compacts on the way: every batch is
+        routed, and merge-on-read of the four live partials equals the
+        batch groupBy."""
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
+        sink = PartialUpsertSink(spark, os.path.join(tmp_dir, "upsert"), "user_id")
         stream = chunked_replay(spark, tables["events"], os.path.join(tmp_dir, "replay"), n_chunks=4)
         agg = ReshapeStreamingAgg(
-            "user_id", "value", "event_id", ReshapeConf(enabled=True, parallelism=8, freq_ms=0)
+            "user_id", "value", "event_id",
+            ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=sink,
         )
-        q = agg.attach(stream, os.path.join(tmp_dir, "ckpt"))
-        q.awaitTermination(120)
+        agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(120)
         assert agg.batches_seen == 4
+        assert len(agg.routing_history) == 4
+        assert not os.path.exists(os.path.join(sink.path, "CURRENT"))  # no snapshot
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in tables["events"]
@@ -216,7 +241,10 @@ class TestSaltedAgg:
             .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
             .collect()
         }
-        got = {k: (c, round(s, 4)) for k, (c, s) in agg.results.items()}
+        got = {
+            r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
+            for r in sink.result_df().collect()
+        }
         assert got == expected
 
 
@@ -376,6 +404,9 @@ class TestScalePath:
         assert sink._partial_epochs() == []
 
     def test_streaming_agg_with_upsert_sink(self, spark, tables, tmp_dir):
+        """Four micro-batches of the events replay through the
+        controller into the upsert sink (one compaction on the way):
+        the merged result equals the batch groupBy."""
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
         sink = PartialUpsertSink(spark, os.path.join(tmp_dir, "upsert"), "user_id", compact_every=3)
@@ -386,7 +417,6 @@ class TestScalePath:
         )
         agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(120)
         assert agg.batches_seen == 4
-        assert agg.results == {}  # nothing accumulated on the driver
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in tables["events"]
@@ -405,11 +435,10 @@ class TestControllerOnSkewedStream:
     def test_controller_engages_on_zipf_stream(self, spark, tmp_dir):
         """End-to-end on genuinely skewed data: key 0 carries ~50% of a
         replayed stream; the controller must detect it, mitigate with the
-        first-phase fan-out, and the salted results must stay exact."""
-        import os
-
-        from pyspark.sql import functions as F
-
+        first-phase fan-out, and the salted results must stay exact.
+        Run 2 restarts the query on a fresh sink with the same (sticky)
+        controller: the routing applies from its first batch and the
+        results stay exact."""
         from reshape_on_flink_spark.sources.readers import datagen
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
@@ -419,106 +448,48 @@ class TestControllerOnSkewedStream:
             F.col("value"),
             F.timestamp_millis(F.col("id") * 1000).alias("ts"),
         )
-        stream = chunked_replay(spark, df, os.path.join(tmp_dir, "replay"), n_chunks=3)
-        agg = ReshapeStreamingAgg(
-            "user_id", "value", "event_id", ReshapeConf(enabled=True, parallelism=8, freq_ms=0)
-        )
-        agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(180)
-
-        # the hot key was detected and salted with the first-phase fan-out
-        assert any(r.get(0, 0) == 10 for r in agg.routing_history), agg.routing_history
-        # and results are exactly the batch ground truth
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in df.groupBy("user_id")
             .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
             .collect()
         }
-        got = {k: (c, round(s, 4)) for k, (c, s) in agg.results.items()}
-        assert got == expected
 
+        def sink(tag):
+            return PartialUpsertSink(spark, os.path.join(tmp_dir, f"upsert_{tag}"), "user_id")
 
-    def test_controller_engages_on_zipf_listener_mode(self, spark, tmp_dir):
-        """Same zipf stream, observation='listener' (round-8): the
-        controller is fed exclusively by StreamingQueryListener progress
-        events polling the upsert sink — the control-plane analog of the
-        reference's JobMaster timer polling the MetricStore
-        (ControllerSimulator.scala:52-94,157-172). Run 1 engages the hot
-        key out-of-band; run 2 (sticky controller, listener removed)
-        applies the routing from its first batch and stays exact."""
-        import os
-        import time
+        def run(tag):
+            stream = chunked_replay(
+                spark, df, os.path.join(tmp_dir, f"replay_{tag}"), n_chunks=3
+            )
+            agg.attach(stream, os.path.join(tmp_dir, f"ckpt_{tag}")).awaitTermination(180)
+            return {
+                r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
+                for r in agg.sink.result_df().collect()
+            }
 
-        from pyspark.sql import functions as F
-
-        from reshape_on_flink_spark.sources.readers import datagen
-        from reshape_on_flink_spark.streaming.source import chunked_replay
-
-        df = datagen(spark, 20_000, n_keys=50, skew_hot_share=0.5).select(
-            F.col("id").alias("event_id"),
-            F.col("key").alias("user_id"),
-            F.col("value"),
-            F.timestamp_millis(F.col("id") * 1000).alias("ts"),
-        )
-        sink1 = PartialUpsertSink(spark, os.path.join(tmp_dir, "upsert_l1"), "user_id")
         agg = ReshapeStreamingAgg(
             "user_id", "value", "event_id",
-            ReshapeConf(enabled=True, parallelism=8, freq_ms=0, observation="listener"),
-            sink=sink1,
+            ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=sink(1),
         )
-        stream1 = chunked_replay(
-            spark, df, os.path.join(tmp_dir, "replay_l1"), n_chunks=3
-        )
-        q = agg.attach(stream1, os.path.join(tmp_dir, "ckpt_l1"))
-        try:
-            q.awaitTermination(180)
-            # progress events are delivered asynchronously — poll
-            deadline = time.time() + 60
-            while time.time() < deadline and agg.listener.ticks == 0:
-                time.sleep(0.5)
-        finally:
-            spark.streams.removeListener(agg.listener)
-        # the data path never observed; the listener engaged the hot key
-        assert agg.listener.ticks >= 1
-        assert agg.controller.routing().get(0) == 10  # first-phase fan-out
+        assert run(1) == expected
+        # the hot key was detected and salted with the first-phase fan-out
+        assert any(r.get(0, 0) == 10 for r in agg.routing_history), agg.routing_history
 
-        # run 2: listener removed, controller sticky — routing is applied
-        # to the data path from the very first batch, results stay exact
-        sink2 = PartialUpsertSink(spark, os.path.join(tmp_dir, "upsert_l2"), "user_id")
-        agg.sink = sink2
+        # run 2: a restarted query on a fresh sink, same controller
+        agg.sink = sink(2)
         run2_start = agg.batches_seen
-        stream2 = chunked_replay(
-            spark, df, os.path.join(tmp_dir, "replay_l2"), n_chunks=3
-        )
-        try:  # attach registers a fresh listener for run 2
-            agg.attach(stream2, os.path.join(tmp_dir, "ckpt_l2")).awaitTermination(180)
-        finally:
-            spark.streams.removeListener(agg.listener)
+        assert run(2) == expected
         assert all(
             r.get(0) == 10 for r in agg.routing_history[run2_start:]
         ), agg.routing_history
-        expected = {
-            r["user_id"]: (r["cnt"], round(r["sv"], 4))
-            for r in df.groupBy("user_id")
-            .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
-            .collect()
-        }
-        got = {
-            r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
-            for r in sink2.result_df().collect()
-        }
-        assert got == expected
 
-
-    @pytest.mark.parametrize("observation", ["inline", "listener"])
-    def test_controller_observes_compaction_epochs(self, spark, tmp_dir, observation):
+    def test_controller_observes_compaction_epochs(self, spark, tmp_dir):
         """With freq_ms=0 every epoch is due, including the ones whose
         own write triggers a compaction (compact_every=2: epochs 1 and
         3), which folds and would delete the partial the controller
-        reads back. One controller iteration per micro-batch, in both
-        observation modes, and the sink stays exact."""
-        import time
-
+        reads back. One controller iteration per micro-batch, and the
+        sink stays exact."""
         from reshape_on_flink_spark.sources.readers import datagen
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
@@ -533,19 +504,11 @@ class TestControllerOnSkewedStream:
         )
         agg = ReshapeStreamingAgg(
             "user_id", "value", "event_id",
-            ReshapeConf(enabled=True, parallelism=8, freq_ms=0, observation=observation),
+            ReshapeConf(enabled=True, parallelism=8, freq_ms=0),
             sink=sink,
         )
         stream = chunked_replay(spark, df, os.path.join(tmp_dir, "replay"), n_chunks=4)
-        try:
-            agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(180)
-            # listener progress events arrive asynchronously — poll
-            deadline = time.time() + 60
-            while time.time() < deadline and agg.controller.iterations < agg.batches_seen:
-                time.sleep(0.5)
-        finally:
-            if agg.listener is not None:
-                spark.streams.removeListener(agg.listener)
+        agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(180)
         assert agg.batches_seen == 4
         assert sink._compacted_through() == 3  # epochs 1 and 3 compacted
         assert agg.controller.iterations == agg.batches_seen

@@ -36,7 +36,11 @@ def test_streaming_soak_concurrent_bounded_state(spark, tmp_dir):
     from reshape_on_flink_spark.queries.streaming_batch import q_cumulate_window
     from reshape_on_flink_spark.session import load_tables
     from reshape_on_flink_spark.streaming.ops import cumulate_agg
-    from reshape_on_flink_spark.streaming.reshape import ReshapeConf, ReshapeStreamingAgg
+    from reshape_on_flink_spark.streaming.reshape import (
+        PartialUpsertSink,
+        ReshapeConf,
+        ReshapeStreamingAgg,
+    )
     from reshape_on_flink_spark.streaming.source import chunked_replay
 
     events = load_tables(spark, SF01)["events"]
@@ -81,9 +85,10 @@ def test_streaming_soak_concurrent_bounded_state(spark, tmp_dir):
     )
 
     # --- consumer 3: Reshape skew controller over the same replay --------
+    upsert = PartialUpsertSink(spark, os.path.join(tmp_dir, "upsert_rs"), "user_id")
     agg = ReshapeStreamingAgg(
         "user_id", "value", "event_id",
-        ReshapeConf(enabled=True, parallelism=8, freq_ms=0),
+        ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=upsert,
     )
     q_rs = agg.attach(stream, os.path.join(tmp_dir, "ckpt_rs"))
 
@@ -157,7 +162,10 @@ def test_streaming_soak_concurrent_bounded_state(spark, tmp_dir):
         .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
         .collect()
     }
-    got_rs = {k: (c, round(s, 4)) for k, (c, s) in agg.results.items()}
+    got_rs = {
+        r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
+        for r in upsert.result_df().collect()
+    }
     assert got_rs == expected_rs
 
 

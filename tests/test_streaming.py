@@ -241,6 +241,36 @@ def test_rate_events_source_shape(spark):
     assert set(sdf.columns) == {"ts", "event_id", "user_id", "value"}
 
 
+def test_chunked_replay_keeps_every_row_under_max_records_per_file(spark, tmp_dir):
+    """A session-wide ``maxRecordsPerFile`` would split each chunk into
+    several files; the replay must still hold every row, one chunk per
+    micro-batch."""
+    from reshape_on_flink_spark.streaming.source import chunked_replay
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        stream = chunked_replay(
+            spark, spark.range(1000), os.path.join(tmp_dir, "replay"),
+            n_chunks=2, order_col="id",
+        )
+        batches = []
+        (
+            stream.writeStream.foreachBatch(
+                lambda df, _: batches.append([r["id"] for r in df.collect()])
+            )
+            .option("checkpointLocation", os.path.join(tmp_dir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination(120)
+        )
+    finally:
+        spark.conf.set(key, saved)
+    assert len(batches) == 2
+    assert sorted(i for b in batches for i in b) == list(range(1000))
+
+
 def test_async_lookup_enrichment(spark, tables):
     from reshape_on_flink_spark.streaming.ops import async_lookup
     import asyncio
