@@ -133,6 +133,23 @@ from reshape_on_flink_spark.operators.cep import (
     streaming_match_recognize,
 )
 
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (a backslash in a literal
+    is an escape, so it is escaped like the quote)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_in(values) -> str:
+    """``(v1, v2, ...)``: the right side of a SQL ``IN``."""
+    return "(" + ", ".join(_sql_str(v) for v in values) + ")"
+
+
 _KINDS = (
     "begin",
     "next",
@@ -475,6 +492,12 @@ def _build_pandas_define(pattern) -> dict:
     return pandas_define
 
 
+def _check_stage_name(name: str) -> None:
+    # stage names are the MATCH_RECOGNIZE pattern's symbols
+    if not name.isidentifier():
+        raise ValueError(f"stage name must be an identifier, got {name!r}")
+
+
 class Pattern:
     """Immutable-ish fluent builder; every method returns ``self`` (the
     Flink API mutates the tail stage the same way)."""
@@ -491,6 +514,7 @@ class Pattern:
             # group pattern sequence start (Pattern.java:503)
             p._stages.append(_Stage(name="__group0", kind="begin", group=name))
             return p
+        _check_stage_name(name)
         p._stages.append(_Stage(name=name, kind="begin"))
         return p
 
@@ -504,8 +528,7 @@ class Pattern:
             return self
         if any(s.name == name for s in self._stages):
             raise ValueError(f"duplicate stage name {name!r}")
-        if not name.isidentifier():
-            raise ValueError(f"stage name must be an identifier, got {name!r}")
+        _check_stage_name(name)
         self._stages.append(_Stage(name=name, kind=kind))
         return self
 
@@ -3509,15 +3532,10 @@ class PatternStream:
             # 3-4 s group-family queries. The aggregation and survival
             # predicates are now composed as SQL STRINGS and parsed
             # JVM-side in one expr() each — identical Catalyst trees
-            # (same functions, same three-valued-logic chains; symbols
-            # are plain identifiers, counts are int literals), pinned
-            # by the oracle hash equality of all 17 timeout queries.
-            def _q(name: str) -> str:
-                return f"`{name}`"
-
-            def _in_list(syms) -> str:
-                return "(" + ", ".join(f"'{s}'" for s in syms) + ")"
-
+            # (same functions, same three-valued-logic chains; names
+            # are quoted by _sql_ident/_sql_str, counts are int
+            # literals), pinned by the oracle hash equality of all 17
+            # timeout queries.
             aggs = [
                 # first/last row picked by the tie-proof per-partition rid
                 "min(struct(__to_rid, __to_tick)).`__to_tick` AS `__first`",
@@ -3527,19 +3545,20 @@ class PatternStream:
             ]
             for c in last_cols:
                 aggs.append(
-                    f"max(struct(__to_rid, {_q(c)})).{_q(c)} AS {_q('__l' + c)}"
+                    f"max(struct(__to_rid, {_sql_ident(c)}))."
+                    f"{_sql_ident(c)} AS {_sql_ident('__l' + c)}"
                 )
             if gate is not None:
                 aggs.append(
                     "sum(CAST(matched_symbol IN "
-                    f"{_in_list(gate[0])} AS INT)) AS `__cnt`"
+                    f"{_sql_in(gate[0])} AS INT)) AS `__cnt`"
                 )
                 if len(gate) > 3 and gate[2] is not None:
                     # second counter (round 14, bounded inner loops):
                     # current-iteration takes of the parked loop leaf
                     aggs.append(
                         "sum(CAST(matched_symbol IN "
-                        f"{_in_list(gate[2])} AS INT)) AS `__cnt2`"
+                        f"{_sql_in(gate[2])} AS INT)) AS `__cnt2`"
                     )
             for j2, (mode, gname, post, kkey) in enumerate(spans):
                 # the kill-scan struct AT the span anchor row (the last
@@ -3547,16 +3566,17 @@ class PatternStream:
                 # mode) = the first greedy-take-able event after it,
                 # and the rid of the first post-greedy taken row
                 anchor = (
-                    f"matched_symbol = '{gname}'"
+                    "matched_symbol = " + _sql_str(gname)
                     if mode == "g"
-                    else f"NOT (matched_symbol IN {_in_list(post)})"
+                    else f"NOT (matched_symbol IN {_sql_in(post)})"
                 )
                 aggs.append(
                     f"max(CASE WHEN {anchor} THEN struct(__to_rid, "
-                    f"{_q('__to_kl_' + kkey)} AS kl) END) AS `__gsp{j2}`"
+                    f"{_sql_ident('__to_kl_' + kkey)} AS kl) END) "
+                    f"AS `__gsp{j2}`"
                 )
                 aggs.append(
-                    f"min(CASE WHEN matched_symbol IN {_in_list(post)} "
+                    f"min(CASE WHEN matched_symbol IN {_sql_in(post)} "
                     f"THEN __to_rid END) AS `__pn{j2}`"
                 )
             g = (
@@ -3581,8 +3601,8 @@ class PatternStream:
                 window column for static scans, the per-assignment
                 cogroup column for ITERATIVE ones (round 13)."""
                 if scan_specs[key][2] is not None:
-                    return _q(f"__itk_{key}")
-                return _q(f"__l__to_nt_{key}")
+                    return _sql_ident(f"__itk_{key}")
+                return _sql_ident(f"__l__to_nt_{key}")
             for j2 in range(len(spans)):
                 # the reference branch died at the sink before the next
                 # take: a greedy-take-able event at rid <= the first
@@ -3600,7 +3620,7 @@ class PatternStream:
             def _kills_clear(kills) -> str:
                 cs = []
                 for flavor, kk in kills:
-                    col = _q(f"__l__to_kl_{kk}")
+                    col = _sql_ident(f"__l__to_kl_{kk}")
                     kt = f"{col}.`__to_tick`"
                     if flavor == "gap":
                         cs.append(f"({col} IS NULL OR {kt} >= __horizon)")
@@ -3623,7 +3643,7 @@ class PatternStream:
                 the kill (ties kill: NOT(until) guards the take)."""
                 out = []
                 for flavor, kk in kills:
-                    col = _q(f"__l__to_kl_{kk}")
+                    col = _sql_ident(f"__l__to_kl_{kk}")
                     kt = f"{col}.`__to_tick`"
                     fired = f"{col} IS NOT NULL AND {kt} < __horizon"
                     if flavor == "adj":
@@ -3645,7 +3665,7 @@ class PatternStream:
             if primary[0] == "consume":
                 alive = _clear(_scan_col(primary[1]))
             elif primary[0] == "any":
-                alive = _clear(_q("__l__to_next_any"))
+                alive = _clear(_sql_ident("__l__to_next_any"))
             else:
                 alive = "true"
             alive = f"({alive} AND {_kills_clear(primary[2])})"
@@ -3657,7 +3677,7 @@ class PatternStream:
                     else None,
                 )))
             if copies:
-                nxt = _q("__l__to_next_any")
+                nxt = _sql_ident("__l__to_next_any")
                 trigger = f"({nxt} IS NOT NULL AND {nxt} < __horizon)"
                 cp = "false"
                 gated = (

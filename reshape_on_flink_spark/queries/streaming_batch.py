@@ -2598,6 +2598,7 @@ def q_cep_timeout_group_not(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_changelog_join_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import atexit
     import os
     import shutil
     import tempfile
@@ -2682,10 +2683,11 @@ def q_changelog_join_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sink collects every output row onto the driver (the second
     # super-linear term at sf10); the parquet sink stays distributed.
     # Inputs + checkpoint are removed; the output dir must outlive the
-    # returned DataFrame.
+    # returned DataFrame, so it is removed at interpreter exit.
     out_dir = os.path.join(
         tempfile.gettempdir(), f"jcl_gate_out_{uuid.uuid4().hex[:8]}"
     )
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     q = (
         joined.writeStream.format("parquet")
         .option("path", out_dir)
@@ -2697,7 +2699,7 @@ def q_changelog_join_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    shutil.rmtree(base, ignore_errors=True)
+        shutil.rmtree(base, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
         .select(

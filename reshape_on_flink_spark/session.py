@@ -24,6 +24,9 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -40,6 +43,15 @@ def get_spark(
     nothing here is local-mode-specific except the master URL.
     ``extra_confs`` are applied at builder time (context-static settings
     like the shuffle codec need this; measurement sweeps use it).
+
+    The Python workers start from :mod:`reshape_on_flink_spark.pydaemon`
+    (``spark.python.daemon.module``) and get the package's parent
+    directory prepended to their ``PYTHONPATH``
+    (``spark.executorEnv.PYTHONPATH``, ahead of any value in
+    ``extra_confs``), so the daemon and UDFs that pickle engine helpers
+    by reference import the package whatever the driver's cwd. On a
+    cluster the executors' Python must be able to import the package,
+    as the engine's UDFs already required.
     """
     cores = cores or default_parallelism()
     builder = (
@@ -77,10 +89,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # --- Python workers fork from a daemon that pays the CPython
+        # 3.11 zipimport re-read once, not once per task (pydaemon.py) ---
+        .config("spark.python.daemon.module", "reshape_on_flink_spark.pydaemon")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")
-    for k, v in (extra_confs or {}).items():
+    confs = dict(extra_confs or {})
+    # the Python workers import this package (the daemon, engine helpers
+    # pickled by reference) whatever the driver's cwd
+    path_key = "spark.executorEnv.PYTHONPATH"
+    confs[path_key] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, confs.get(path_key)) if p
+    )
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -104,13 +126,13 @@ PYTHON_STAGE_TASK_BYTES = int(
 #: genuinely heavy Python stage — 1-2 partitions is the exact failure
 #: the pin exists to prevent. The floor is ``min(this, task_slots)``
 #: because every Python task pays a fixed worker setup cost whatever
-#: its input: on CPython 3.11, ``setup_spark_files`` calls
-#: ``importlib.invalidate_caches()``, which re-reads the directories of
-#: ``pyspark.zip`` and the Spark core jar once for each of their cached
-#: zipimporters (16 of them), 0.14-0.38 s per task measured inside the
-#: workers on a 4-core box (CPython 3.13 made that re-read lazy). A
-#: floor above the slot count adds no parallelism, only a second wave
-#: of that fixed cost: 8 tasks on 4 slots run as two waves.
+#: its input: about 0.07 s per task for a trivial ``mapInPandas`` on a
+#: 4-core box (64 tasks on 4 slots). The CPython 3.11 zipimport
+#: directory re-read that ``setup_spark_files`` used to add to every
+#: task (0.30 s per task on the same probe) is now paid once per worker
+#: daemon (:mod:`reshape_on_flink_spark.pydaemon`). A floor above the
+#: slot count adds no parallelism, only a second wave of that fixed
+#: cost: 8 tasks on 4 slots run as two waves.
 PYTHON_STAGE_MIN_PARTITIONS = int(
     os.environ.get("RESHAPE_PY_STAGE_MIN_PARTITIONS", 8)
 )
@@ -165,10 +187,11 @@ def repartition_for_python_stage(
     the width at ``ceil(estimated_bytes / task_bytes)``, floored at
     ``min(PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark))``. The floor
     never exceeds the task slots because each Python task pays a fixed
-    worker setup (0.14-0.38 s per task on CPython 3.11: the zipimport
-    directory re-read described at :data:`PYTHON_STAGE_MIN_PARTITIONS`);
-    on 4 slots a floor of 8 ran every small stage as two waves of that
-    cost and bought no parallelism, so a small stage now runs in one
+    worker setup (about 0.07 s per task on 4 cores, see
+    :data:`PYTHON_STAGE_MIN_PARTITIONS`; the CPython 3.11 zipimport
+    re-read is now paid once per worker daemon, not per task); on 4
+    slots a floor of 8 ran every small stage as two waves of that cost
+    and bought no parallelism, so a small stage now runs in one
     wave. The cap self-removes at scale
     (a 10x input estimate re-opens the full configured width) and on
     estimate failure (unknown/huge sizeInBytes ⇒ full width), so it is
@@ -265,7 +288,11 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
 
     Called from every table-loading path so the engine behaves the same on
     a caller-provided session (e.g. the driver's vanilla SparkSession) as
-    on one built by get_spark().
+    on one built by get_spark(). The Python worker daemon is the one
+    exception: ``spark.python.daemon.module`` is static, so a
+    caller-provided session keeps ``pyspark.daemon`` and its Python
+    tasks, still correct, pay the CPython 3.11 zipimport re-read per
+    task (see :data:`PYTHON_STAGE_MIN_PARTITIONS`).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

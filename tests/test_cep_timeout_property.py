@@ -456,3 +456,49 @@ def test_cep_multi_sequential_equals_single(spark):
             )
             got_t = sorted(by_tag.get(p["tag"], []))
             assert got_t == want_t, (after, p["tag"])
+
+
+HOSTILE_NAMES = ["a'b", "c`d", "e\\f", "') OR ('1'='1"]
+
+
+def test_timeout_sql_quoting_keeps_hostile_names_intact(spark):
+    """The timeout builder's SQL strings quote every name they splice
+    in: each hostile string parses back to itself as a literal, an IN
+    list over them matches exactly them (the injection-shaped name is
+    not a tautology), and a backticked identifier reads its column."""
+    from reshape_on_flink_spark.api.cep import _sql_ident, _sql_in, _sql_str
+
+    lits = spark.range(1).select(
+        *[F.expr(_sql_str(n)).alias(f"n{i}")
+          for i, n in enumerate(HOSTILE_NAMES)]
+    ).first()
+    assert list(lits) == HOSTILE_NAMES
+
+    decoys = ["a", "ab", "1", "", "e\\\\f", "c``d"]
+    df = spark.createDataFrame(
+        [(n,) for n in HOSTILE_NAMES + decoys], "matched_symbol string"
+    )
+    hit = df.where(F.expr(f"matched_symbol IN {_sql_in(HOSTILE_NAMES)}"))
+    assert sorted(r[0] for r in hit.collect()) == sorted(HOSTILE_NAMES)
+    for n in HOSTILE_NAMES:
+        one = df.where(F.expr("matched_symbol = " + _sql_str(n)))
+        assert [r[0] for r in one.collect()] == [n]
+
+    cols = df.select(
+        *[F.lit(i).alias(n) for i, n in enumerate(HOSTILE_NAMES)]
+    ).limit(1)
+    got = cols.select(
+        *[F.expr(_sql_ident(n)).alias(f"c{i}")
+          for i, n in enumerate(HOSTILE_NAMES)]
+    ).first()
+    assert list(got) == list(range(len(HOSTILE_NAMES)))
+
+
+@pytest.mark.parametrize("name", HOSTILE_NAMES)
+def test_timeout_pattern_rejects_non_identifier_stage_names(name):
+    """Stage names are the MATCH_RECOGNIZE pattern's symbols, so a
+    non-identifier name fails at construction, at the head stage too."""
+    with pytest.raises(ValueError, match="stage name must be an identifier"):
+        Pattern.begin(name)
+    with pytest.raises(ValueError, match="stage name must be an identifier"):
+        Pattern.begin("A").where(_c("a")).followed_by(name)
