@@ -672,7 +672,8 @@ def kcore_subgraph(
     (small in practice: degeneracy ordering collapses most graphs in a
     handful of rounds). Peeling is monotone (edges only leave) and
     idempotent at the fixed point, which is what lets a bounded unrolled
-    SQL replica hash-match the converged result.
+    SQL replica hash-match the converged result. The convergence probe
+    counts each new state once and carries the count to the next round.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -690,10 +691,29 @@ def kcore_subgraph(
             keep.withColumnRenamed("node", src), src, "left_semi"
         ).join(keep.withColumnRenamed("node", dst), dst, "left_semi")
 
-    return iterate(
-        seed, step, max_iters,
-        converged=lambda prev, new: new.count() == prev.count(),
-    )
+    prev_count: list[int] = []
+
+    def converged(prev: DataFrame, new: DataFrame) -> bool:
+        if not prev_count:
+            prev_count.append(prev.count())
+        n = new.count()
+        done = n == prev_count[-1]
+        prev_count.append(n)
+        return done
+
+    return iterate(seed, step, max_iters, converged=converged)
+
+
+#: symmetric edges one coreness block holds (2^23, about 8.4M). One
+#: block reaches the global fixed point in one round, so the budget is
+#: set to keep realistic graphs in one task: the densified sf1 graph
+#: (4.7M symmetric edges) is one block.
+CORENESS_BLOCK_EDGES = 1 << 23
+
+
+def coreness_blocks(n_sym_edges: int) -> int:
+    """Blocks for a coreness round over ``n_sym_edges`` symmetric edges."""
+    return max(1, -(-n_sym_edges // CORENESS_BLOCK_EDGES))
 
 
 def coreness(
@@ -711,63 +731,106 @@ def coreness(
     hash-gateable; monotone non-increasing + idempotent, so a bounded
     unrolled SQL replica matches the converged result.
 
-    Each round: one join routing neighbor values + one per-node window
-    rank + one aggregate — keyed shuffles only. The h-index of a
-    celebrity vertex ranks its full neighbor list (one window partition);
-    that is the same per-key skew bound as any keyed window here.
-    """
-    from pyspark.sql import Window as W
+    Block-local h-index: nodes are hashed into ``coreness_blocks``
+    blocks, sized from the exact symmetric edge count. Each round is one
+    keyed shuffle that brings every node's adjacency, its own value and
+    its neighbors' values to the node's block; a numpy grouped-map stage
+    then iterates the h-index inside the block until the block stops
+    changing, reading in-block neighbors' current values and keeping
+    out-of-block neighbors' values from the start of the round.
+    Asynchronous h-index updates that start from the degrees converge to
+    the same coreness (Montresor et al., "Distributed k-Core
+    Decomposition", IEEE TPDS 2013), so the result is exact for any
+    block count. One block is the whole graph: its fixed point is the
+    global one and the operator returns after one round, with no
+    convergence probe. With more blocks a round's ``__changed`` flags
+    feed a LIMIT-1 probe and the loop stops when no node changed.
 
+    Rounds, not data, set the cost: each round pays the per-job
+    scheduling floor. The synchronous h-index needed 7 rounds at sf0.01,
+    21 at sf0.1 and 21 on the densified sf1 graph (4.7M symmetric edges;
+    55 s on 4 cores, ``tools/coreness_probe.py``). One block does each
+    in one round (sf1: 20 s with the edge build, 0.9 GB worker RSS).
+    Hashed blocks save little, because the co-occurrence graph is
+    dense: forced ~4/8/32 blocks took 15/19/20 rounds at sf0.1, and 5
+    blocks on sf1 took 20 rounds (73 s). So the block budget keeps
+    graphs in one block until one task cannot hold them. A celebrity
+    vertex's adjacency is in one block, the same per-key skew bound as
+    any keyed stage here.
+    """
+    # an edge with a null endpoint is no edge
+    edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
     sym = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).union(
         edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
     )
     sym = sym.localCheckpoint()
+    n_blocks = coreness_blocks(sym.count())
+    block = F.lit(0) if n_blocks == 1 else F.pmod(F.hash("node"), F.lit(n_blocks))
     state0 = sym.groupBy("node").agg(F.count("*").alias("val"))
+    node_type = sym.schema["node"].dataType.simpleString()
+    out_schema = f"node {node_type}, val long, __changed boolean"
 
-    # Bulk iteration deliberately (NOT iterate_delta): the h-index
-    # frontier does not shrink usefully on dense co-occurrence graphs —
-    # values walk down through ~max-coreness rounds with a large changed
-    # set every round — so a delta formulation pays 4 joins/round for no
-    # frontier saving (measured 20x slower at sf0.1). Delta iteration
-    # wins where the frontier is genuinely sparse (BFS/SSSP tails; see
-    # iterate_delta and its SSSP test).
-    # convergence rides the step itself: the new state carries a
-    # __changed flag computed against the previous values inside the
-    # same job, so the per-round cost is ONE checkpointed job plus a
-    # LIMIT-1 probe on its result — not a separate join+count job.
-    # NOTE (round 14): a "hybrid" step that rode a flagged self row on
-    # the nbr-join shuffle to drop the second state join was a measured
-    # 3.1x REGRESSION at sf0.1 (driver r13: 8.2s -> 25.4s; the wider
-    # shuffle + per-key extra row cost more than the avoided join).
-    # Reverted to the plain formulation; do not reintroduce without an
-    # interleaved A/B at sf0.1 and sf1.
+    def sweep_block(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
+        import pandas as pd
+
+        me = pdf["__self"].to_numpy()
+        node, nbr, nval = (pdf[c].to_numpy() for c in ("node", "nbr", "nval"))
+        order = np.argsort(node[me])
+        nodes, start = node[me][order], nval[me][order]
+        # edges sorted by node once: every sweep then reads memory in order
+        adj = np.flatnonzero(~me)
+        adj = adj[np.argsort(node[adj], kind="stable")]
+        own = np.searchsorted(nodes, node[adj])
+        nbr, nval = nbr[adj], nval[adj]
+        pos = np.minimum(np.searchsorted(nodes, nbr), len(nodes) - 1)
+        inside = np.flatnonzero(nodes[pos] == nbr)
+        pos = pos[inside]
+        v = start.copy()
+        top = int(max(nval.max(), v.max())) + 1  # values only fall
+        while True:
+            nval[inside] = v[pos]
+            # values only fall, so h <= v: a node keeps v exactly when
+            # at least v of its neighbors hold a value >= v
+            ok = np.bincount(own, weights=nval >= v[own], minlength=len(nodes)) >= v
+            if ok.all():
+                break
+            # re-rank only the failing nodes' edges: by node, value desc
+            e = np.flatnonzero(~ok[own])
+            e = e[np.argsort(own[e] * top - nval[e])]
+            grp = own[e]
+            heads = np.flatnonzero(np.r_[True, grp[1:] != grp[:-1]])
+            rank = np.arange(1, len(e) + 1) - np.repeat(heads, np.diff(np.r_[heads, len(e)]))
+            v[grp[heads]] = np.maximum.reduceat(np.minimum(rank, nval[e]), heads)
+        return pd.DataFrame({"node": nodes, "val": v, "__changed": v != start})
+
     def step(state: DataFrame, _i: int) -> DataFrame:
-        nbr_vals = sym.join(
-            state.select(F.col("node").alias("nbr"), "val"), "nbr"
-        ).select("node", "val")
-        ranked = nbr_vals.withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("node").orderBy(F.desc("val"))),
-        )
-        new_vals = ranked.groupBy("node").agg(
-            F.max(F.least(F.col("rn"), F.col("val"))).alias("nv")
+        # each node's own value rides the shuffle as one __self row, so
+        # the plan reads state once. A second join on state squared the
+        # plan's size estimate every round (a checkpoint keeps its
+        # origin's statistics): its BigInt product took 17 s of round 20
+        # in a 32-block run at sf0.1.
+        adj = sym.join(
+            state.select(F.col("node").alias("nbr"), F.col("val").alias("nval")), "nbr"
+        ).select("node", "nbr", "nval", F.lit(False).alias("__self"))
+        me = state.select(
+            "node", F.col("node").alias("nbr"), F.col("val").alias("nval"),
+            F.lit(True).alias("__self"),
         )
         return (
-            state.select("node", F.col("val").alias("pv"))
-            .join(new_vals, "node")
-            .select(
-                "node",
-                F.col("nv").alias("val"),
-                (F.col("nv") != F.col("pv")).alias("__changed"),
-            )
+            adj.union(me)
+            .withColumn("__blk", block)
+            .groupBy("__blk")
+            .applyInPandas(sweep_block, out_schema)
         )
 
     def converged(_prev: DataFrame, new: DataFrame) -> bool:
         return new.where(F.col("__changed")).isEmpty()
 
+    one_block = n_blocks == 1
     out = iterate(
-        state0.withColumn("__changed", F.lit(True)), step, max_iters,
-        converged=converged, on_round=on_round,
+        state0, step, min(max_iters, 1) if one_block else max_iters,
+        converged=None if one_block else converged, on_round=on_round,
     )
     return out.select("node", F.col("val").alias("coreness"))
 

@@ -22,9 +22,9 @@ TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 # the default run completes within budget. The heavy tier is NOT dead
 # code: set RESHAPE_RUN_HEAVY=1 to include it; every optimization round
 # runs the full suite once and records the green result in
-# OPTIMIZATION_r*.md. Deterministic semantics pins (the batch-route
-# ITCase matrix, oracle equality, operator contracts) all stay in the
-# default tier.
+# docs/rounds/OPTIMIZATION_r*.md. Deterministic semantics pins (the
+# batch-route ITCase matrix, oracle equality, operator contracts) all
+# stay in the default tier.
 # ---------------------------------------------------------------------------
 _HEAVY_FILES = {"test_soak.py"}
 _HEAVY_TESTS = {

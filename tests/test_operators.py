@@ -656,6 +656,11 @@ def test_kcore_peeling_cascade(spark):
     """Path 5-6-7 hangs off a triangle 1-2-3 (via 3-5): the 2-core is
     exactly the triangle, and peeling must CASCADE (removing 7 drops 6
     below degree 2, then 5) — a one-round filter would get it wrong."""
+    from unittest import mock
+
+    from pyspark.sql.types import IntegerType
+
+    from reshape_on_flink_spark.operators import iterate as iterate_mod
     from reshape_on_flink_spark.operators.iterate import coreness, kcore_subgraph
 
     edges = spark.createDataFrame(
@@ -666,8 +671,18 @@ def test_kcore_peeling_cascade(spark):
         (1, 2), (2, 3), (3, 1),
     ]
     # coreness: triangle members 2, tail 1
-    got = {r["node"]: r["coreness"] for r in coreness(edges).collect()}
+    rounds: list[int] = []
+    out = coreness(edges, on_round=lambda i, _s: rounds.append(i))
+    got = {r["node"]: r["coreness"] for r in out.collect()}
     assert got == {1: 2, 2: 2, 3: 2, 5: 1, 6: 1, 7: 1}
+    # one block holds the graph: its in-block fixed point is global
+    assert rounds == [0]
+    assert out.schema["node"].dataType == IntegerType()
+    # a budget of 2 symmetric edges per block: 6 blocks, same coreness
+    with mock.patch.object(iterate_mod, "CORENESS_BLOCK_EDGES", 2):
+        assert iterate_mod.coreness_blocks(12) == 6
+        forced = {r["node"]: r["coreness"] for r in coreness(edges).collect()}
+    assert forced == got
     # 3-core of a 4-clique minus nothing: whole clique; of this graph: empty
     assert kcore_subgraph(edges, k=3).count() == 0
     clique = spark.createDataFrame(

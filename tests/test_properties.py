@@ -553,12 +553,20 @@ def test_kcore_subgraph_matches_python_peeling(spark, edges, k):
 def test_coreness_hindex_fixed_point_equals_peeling_definition(spark, edges):
     """The h-index iteration's fixed point IS the coreness (Lu et al.
     theorem) — checked against the direct peeling definition on random
-    graphs, including non-dense ids and disconnected shapes."""
-    from reshape_on_flink_spark.operators.iterate import coreness
+    graphs, including non-dense ids and disconnected shapes. Each graph
+    runs as one block and again with a budget of a few edges per block,
+    so many blocks exchange values across rounds."""
+    from unittest import mock
+
+    from reshape_on_flink_spark.operators import iterate as it
 
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {r["node"]: r["coreness"] for r in coreness(df).collect()}
-    assert got == _py_coreness(edges)
+    want = _py_coreness(edges)
+    got = {r["node"]: r["coreness"] for r in it.coreness(df).collect()}
+    assert got == want
+    with mock.patch.object(it, "CORENESS_BLOCK_EDGES", 4):
+        got = {r["node"]: r["coreness"] for r in it.coreness(df).collect()}
+    assert got == want
 
 
 @settings(max_examples=150, deadline=None)

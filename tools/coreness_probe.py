@@ -23,9 +23,16 @@ the FIXTURE:
      graphs.py docstring prescribes (cap = sf1's observed max bucket,
      keep-lowest-hash per bucket) — optional, --cap to enable.
 
-Writes one JSON line per tier (rounds, per-round seconds, total) so a
-timeout preserves the completed tiers. Bench tooling only — the
-correctness gate is untouched.
+Writes one JSON line per tier (rounds, per-round seconds, total, block
+count, a digest of the result and the peak RSS of the Spark Python
+workers so far) so a timeout preserves the completed tiers. Bench
+tooling only — the correctness gate is untouched.
+
+    python tools/coreness_probe.py sf0.1 sf1_densified
+    python tools/coreness_probe.py --block-edges 1048576 sf1_densified
+
+``--block-edges N`` sets ``operators/iterate.CORENESS_BLOCK_EDGES`` in
+this process, to force a many-block run of the same operator.
 """
 
 from __future__ import annotations
@@ -33,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -40,6 +48,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from reshape_on_flink_spark.operators import iterate  # noqa: E402
 from reshape_on_flink_spark.operators.iterate import coreness  # noqa: E402
 from reshape_on_flink_spark.queries.graphs import (  # noqa: E402
     cooccurrence_edges,
@@ -102,7 +111,54 @@ def capped_densified_edges(spark, copies: int, cap: int):
     )
 
 
-def run_tier(name: str, edges, max_rounds: int = 100):
+def _descendants(root: int) -> list[int]:
+    parent: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/stat") as f:
+                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, IndexError, ValueError):
+                continue
+            parent.setdefault(ppid, []).append(int(d))
+    out, todo = [], [root]
+    while todo:
+        kids = parent.get(todo.pop(), [])
+        out += kids
+        todo += kids
+    return out
+
+
+class WorkerPeakRss:
+    """Polls, on a daemon thread, the peak RSS (VmHWM) of this process's
+    Python descendants: the Spark Python worker daemon and the workers
+    it forks."""
+
+    def __init__(self, every_s: float = 0.5):
+        self.peak_kb = 0
+        self._every = every_s
+        threading.Thread(target=self._poll, daemon=True).start()
+
+    def _poll(self) -> None:
+        while True:
+            time.sleep(self._every)
+            for pid in _descendants(os.getpid()):
+                try:
+                    with open(f"/proc/{pid}/status") as f:
+                        st = f.read()
+                except OSError:
+                    continue
+                if "python" not in st.split("\n", 1)[0]:
+                    continue
+                for line in st.splitlines():
+                    if line.startswith("VmHWM:"):
+                        self.peak_kb = max(self.peak_kb, int(line.split()[1]))
+
+    def mb(self) -> int:
+        return self.peak_kb // 1024
+
+
+def run_tier(name: str, edges, rss: WorkerPeakRss, max_rounds: int = 100):
     rounds: list[float] = []
     t0 = time.perf_counter()
     n_edges = edges.count()
@@ -111,7 +167,10 @@ def run_tier(name: str, edges, max_rounds: int = 100):
         on_round=lambda i, s: rounds.append(round(s, 2)),
     )
     top = out.agg(
-        F.max("coreness").alias("mx"), F.count("*").alias("nodes")
+        F.max("coreness").alias("mx"),
+        F.count("*").alias("nodes"),
+        # order-free digest of the whole result, to compare runs exactly
+        F.sum(F.xxhash64("node", "coreness").cast("decimal(38,0)")).alias("digest"),
     ).first()
     total = time.perf_counter() - t0
     rec = {
@@ -119,33 +178,42 @@ def run_tier(name: str, edges, max_rounds: int = 100):
         "edges": n_edges,
         "nodes": top["nodes"],
         "max_coreness": top["mx"],
+        "digest": str(top["digest"]),
+        "blocks": iterate.coreness_blocks(2 * n_edges),
+        "block_edges": iterate.CORENESS_BLOCK_EDGES,
         "rounds": len(rounds),
         "round_secs": rounds,
         "round_sec_median": round(sorted(rounds)[len(rounds) // 2], 2),
         "total_sec": round(total, 1),
+        "python_worker_peak_rss_mb": rss.mb(),
     }
     print("TIER " + json.dumps(rec), flush=True)
     return rec
 
 
 def main() -> None:
+    args = sys.argv[1:]
+    if args[:1] == ["--block-edges"]:
+        iterate.CORENESS_BLOCK_EDGES = int(args[1])
+        args = args[2:]
     spark = get_spark("coreness_probe")
-    tiers = sys.argv[1:] or ["sf0.1", "sf1_densified", "sf10_true"]
+    rss = WorkerPeakRss()
+    tiers = args or ["sf0.1", "sf1_densified", "sf10_true"]
     recs = []
     for t in tiers:
         if t == "sf0.1":
             ev = spark.read.parquet(os.path.join(SF01, "events.parquet"))
-            recs.append(run_tier(t, cooccurrence_edges(ev)))
+            recs.append(run_tier(t, cooccurrence_edges(ev), rss))
         elif t == "sf1_densified":
             recs.append(
-                run_tier(t, cooccurrence_edges(replicated_events(spark, 10)))
+                run_tier(t, cooccurrence_edges(replicated_events(spark, 10)), rss)
             )
         elif t == "sf10_true":
-            recs.append(run_tier(t, true_copies_edges(spark, 100)))
+            recs.append(run_tier(t, true_copies_edges(spark, 100), rss))
         elif t.startswith("sf10_cap"):
             cap = int(t[len("sf10_cap"):])
             recs.append(
-                run_tier(t, capped_densified_edges(spark, 100, cap))
+                run_tier(t, capped_densified_edges(spark, 100, cap), rss)
             )
         else:
             raise SystemExit(f"unknown tier {t!r}")
