@@ -195,10 +195,11 @@ def main() -> None:
             samples[name].append(time.perf_counter() - t0)
     timings = {name: round(min(s), 3) for name, s in samples.items()}
 
-    # Reshape skew layer: replay the events stream through the adaptive
-    # salted aggregation with the controller on vs off (same result set;
-    # measures the mechanism's overhead at this SF — its win shows on
-    # skewed clusters where one reducer would otherwise serialize).
+    # Reshape skew layer: replay the events stream through
+    # ReshapeStreamingAgg (the keyed process stage) with the controller
+    # off vs on (same result set). The fixture's users are near-uniform,
+    # so this pair measures the control loop's cost per micro-batch;
+    # the skew_process_* pair below measures its win on a hot key.
     # Cluster-scale path: results land in the idempotent PartialUpsertSink,
     # nothing key-shaped accumulates on the driver.
     import shutil
@@ -251,19 +252,15 @@ def main() -> None:
         timings[label] = round(statistics.median(samples), 3)
         startups[label] = round(statistics.median(startup_samples), 3)
 
-    # Keyed-PROCESS skew pair (round 12): the operator class where the
-    # reference's reroute genuinely pays. For relational count/sum,
-    # Spark's map-side partial aggregation already bounds per-reducer
-    # work (at most one partial row per key x map partition reaches the
-    # shuffle), so the skew_replay_* pair above measures pure controller
-    # overhead — by design. A custom keyed stage (applyInPandas — the
-    # Flink keyed-stream analog, and the shape of every stateful pandas
-    # operator in this repo) is NOT map-side combined: every record of
-    # the hot key crosses the shuffle into ONE task and serializes it.
-    # Here the controller observes the hot key (the real control loop,
-    # not a hardcoded table) and its salted reroute is a genuine
-    # wall-clock WIN (~2-2.5x at this size; full streaming-replay
-    # variant in tools/reshape_win_bench.py + BASELINE.md round-12).
+    # Keyed-process skew pair (round 12): one micro-batch-sized job on a
+    # 90%-mass hot key, without and with the controller's routing. A
+    # custom keyed stage (applyInPandas — the Flink keyed-stream analog,
+    # and the shape of every stateful pandas operator in this repo) is
+    # NOT map-side combined: every record of the hot key crosses the
+    # shuffle into ONE task and serializes it. Here the controller
+    # observes the hot key (the real control loop, not a hardcoded
+    # table) and its salted reroute is a wall-clock WIN (~2-2.5x at this
+    # size; BASELINE.md round-12).
     from reshape_on_flink_spark.sources.readers import datagen
     from reshape_on_flink_spark.streaming.reshape import (
         ReshapeController,

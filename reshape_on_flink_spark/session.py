@@ -31,6 +31,17 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+#: ``spark.sql.codegen.cache.maxEntries`` for sessions built by
+#: get_spark. Spark's default of 100 generated classes is smaller than
+#: the working set of two alternating queries such as the changelog
+#: join replay and the coreness fixed point: at 100 the LRU evicts each
+#: query's classes on every pass, so each run recompiles them through
+#: Janino and warms them in the JIT again (33-37 ``GeneratedClass``
+#: methods per changelog run at sf0.01). Static: a caller-provided
+#: session keeps 100 (ensure_confs).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def get_spark(
     app_name: str = "reshape_on_flink_spark",
     *,
@@ -92,6 +103,7 @@ def get_spark(
         # --- Python workers fork from a daemon that pays the CPython
         # 3.11 zipimport re-read once, not once per task (pydaemon.py) ---
         .config("spark.python.daemon.module", "reshape_on_flink_spark.pydaemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")
@@ -292,7 +304,10 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     exception: ``spark.python.daemon.module`` is static, so a
     caller-provided session keeps ``pyspark.daemon`` and its Python
     tasks, still correct, pay the CPython 3.11 zipimport re-read per
-    task (see :data:`PYTHON_STAGE_MIN_PARTITIONS`).
+    task (see :data:`PYTHON_STAGE_MIN_PARTITIONS`). The codegen cache
+    size is static too: such a session keeps Spark's 100 entries
+    instead of :data:`CODEGEN_CACHE_ENTRIES`, so queries that alternate
+    recompile their generated classes more often.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

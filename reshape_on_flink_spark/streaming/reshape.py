@@ -21,10 +21,15 @@ keeps the control loop but makes the mechanism exact:
 - **detect**: per micro-batch, measure per-key load (row counts — the
   micro-batch analog of busyRatio: a key whose share exceeds
   ``hiThreshold × batch/parallelism`` would saturate one task).
-- **mitigate**: split hot keys into ``n_salts`` salted sub-keys
-  (*the reroute*), aggregate partially per (key, salt) — map-side combine
-  means every task does bounded work — then **merge** the partials per
-  key (*the stage the reference omits*), so results are exact.
+- **mitigate**: the operator is a keyed process stage
+  (``keyed_process_agg``, the keyed-stream analog: every raw record of a
+  key reaches one task). Hot keys split into ``n_salts`` salted sub-keys
+  (*the reroute*), each sub-key is processed partially, then the
+  partials are **merged** per key (*the stage the reference omits*), so
+  results are exact. Combinable streaming aggregates (count/sum over a
+  ``groupBy``) need no controller: Spark's map-side partial aggregation
+  already bounds every reducer's work, so they go through
+  ``attach_upsert`` with a plain ``groupBy``.
 - **two-phase schedule**: a fresh hot key starts at the aggressive
   first-phase salt fan-out (90% reroute ≈ split into
   ``1/(1-firstPhaseRatio) = 10`` sub-keys) for ``firstPhaseNum``
@@ -52,6 +57,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+#: Upper bound on a hot key's salted sub-keys in the adaptive phase.
+MAX_SALTS = 64
+
 
 @dataclass
 class ReshapeConf:
@@ -64,7 +72,6 @@ class ReshapeConf:
     first_phase_num: int = 6  # firstPhaseNum: iterations at fixed ratio
     first_phase_ratio: float = 0.9  # reroute 90 of every 100 records
     parallelism: int = 32  # stand-in for subtask count
-    max_salts: int = 64
 
     @classmethod
     def from_spark_conf(cls, spark) -> "ReshapeConf":
@@ -145,7 +152,7 @@ class ReshapeController:
                 elif hk.iterations >= self.conf.first_phase_num:
                     # adaptive phase: size the split to the measured excess
                     # (count-equalizing ratio, ControllerSimulator:140-142)
-                    hk.salts = int(min(self.conf.max_salts, max(2, math.ceil(count / task_mean))))
+                    hk.salts = int(min(MAX_SALTS, max(2, math.ceil(count / task_mean))))
             elif count > self.conf.hi_threshold * task_mean:
                 # newly skewed: aggressive first phase
                 self.hot_keys[key] = _HotKey(salts=first_phase_salts)
@@ -156,44 +163,6 @@ class ReshapeController:
                 del self.hot_keys[key]
 
 
-def salted_partial_merge_agg(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    routing: dict,
-    spread_col: str,
-) -> DataFrame:
-    """Exact two-phase aggregation under a salt routing table.
-
-    partial: groupBy(key, salt) — the shuffle that used to hot-spot now
-    fans hot keys over n_salts reducers; merge: groupBy(key) over at most
-    max_salts rows per key. Emits (key, cnt, sum_value).
-
-    ``spread_col`` must be high-cardinality (event id, payload hash); the
-    salt is ``hash(spread_col) pmod n_salts`` — deterministic, so replays
-    route identically (exactly-once safe).
-    """
-    if not routing:
-        return df.groupBy(key_col).agg(
-            F.count("*").alias("cnt"), F.sum(value_col).alias("sum_value")
-        )
-
-    salt_map = F.create_map(
-        *[x for k, n in routing.items() for x in (F.lit(k), F.lit(int(n)))]
-    )
-    n_salts = F.coalesce(salt_map[F.col(key_col)], F.lit(1))
-    salt = F.pmod(F.hash(F.col(spread_col)), n_salts)
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(key_col, "_salt")
-        .agg(F.count("*").alias("p_cnt"), F.sum(value_col).alias("p_sum"))
-    )
-    return (
-        partial.groupBy(key_col)
-        .agg(F.sum("p_cnt").alias("cnt"), F.sum("p_sum").alias("sum_value"))
-    )
-
-
 def keyed_process_agg(
     df: DataFrame,
     key_col: str,
@@ -201,27 +170,29 @@ def keyed_process_agg(
     routing: dict,
     spread_col: str,
 ) -> DataFrame:
-    """The same exact (key, cnt, sum_value) aggregation computed through
-    a keyed PROCESS stage (``applyInPandas``) instead of a relational
-    aggregate — the operator shape where the reference's reroute
-    actually pays.
+    """Exact per-key (key, cnt, sum_value) through a keyed PROCESS stage
+    (``applyInPandas``) under a salt routing table: the one operator the
+    Reshape controller steers.
 
-    Why this exists: for relational count/sum, Spark's map-side partial
-    aggregation already performs Reshape's mitigation — each reducer
-    receives at most one partial row per (key, map partition), so no
-    skew survives the shuffle and salting is pure overhead (measured:
-    every committed skew_replay shows reshape >= plain). The reference's
-    subtasks are NOT combining aggregates though: a Flink keyed stream
-    ships every raw record of a key to one subtask that does per-record
-    work (``WorkerSimulator.scala:22-42`` — the reroute redirects that
-    record flow). Spark's analog of that operator class is a custom
-    keyed stage (``applyInPandas`` / stateful pandas ops), which Spark
-    never map-side combines: every record crosses the shuffle keyed by
-    ``key_col`` and one task processes the whole hot group. THERE a hot
-    key genuinely serializes a reducer, and the salted reroute
-    (hash(spread_col) pmod n_salts sub-keys, partial process per
-    sub-key, exact merge) is a real wall-clock win — benched as
-    ``skew_process_plain`` vs ``skew_process_reshape``.
+    A Flink keyed stream ships every raw record of a key to one subtask
+    that does per-record work (``WorkerSimulator.scala:22-42``: the
+    reroute redirects that record flow). Spark's analog is a custom keyed
+    stage, which Spark never map-side combines: every record crosses the
+    shuffle keyed by ``key_col`` and one task processes the whole hot
+    group, so a hot key serializes a reducer. Keys in ``routing`` (key ->
+    n_salts) split into sub-keys ``hash(spread_col) pmod n_salts``; each
+    sub-key is processed partially and the partials are merged per key,
+    so the result is exact. ``spread_col`` must be high-cardinality
+    (event id, payload hash); the salt is deterministic, so replays route
+    identically (exactly-once safe). An empty routing runs the plain
+    keyed stage. Benched as ``skew_process_plain`` vs
+    ``skew_process_reshape``.
+
+    Combinable aggregates (count/sum over a ``groupBy``) do not belong
+    here: Spark's map-side partial aggregation already gives each
+    reducer at most one partial row per (key, map partition), so no skew
+    survives the shuffle and salting only adds cost. Stream them through
+    ``attach_upsert`` with a plain ``groupBy``.
 
     Both the plain and the salted keyed stage are size-capped
     (``task_bytes=PYTHON_STAGE_TASK_BYTES``, like the CEP scans): the
@@ -285,7 +256,7 @@ def keyed_process_agg(
         .groupBy(key_col, "_salt")
         .applyInPandas(partial_fn, partial_schema)
     )
-    # merge: at most max_salts tiny partial rows per key — the exactness
+    # merge: at most MAX_SALTS tiny partial rows per key — the exactness
     # stage the reference omits (SURVEY.md §0.5); relational here because
     # the record flow is already collapsed
     return partial.groupBy(key_col).agg(
@@ -554,21 +525,27 @@ def attach_upsert(
 
 
 class ReshapeStreamingAgg:
-    """Streaming grouped aggregation with the Reshape control loop.
+    """Streaming keyed aggregation with the Reshape control loop.
 
-    Runs as ``foreachBatch``: each micro-batch is aggregated via
-    salted_partial_merge_agg (or keyed_process_agg) under the
-    controller's current (sticky) routing table and written to the
-    ``PartialUpsertSink`` (per-epoch idempotent parquet upsert,
-    merge-on-read, periodic compaction — the Delta-MERGE analog). The
-    controller then observes per-key load inline, *from the partial
-    that write just stored* — via ``observe_candidates``, so only the
-    bounded heavy-hitter candidate set ever reaches the driver — and
-    updates the routing for subsequent batches (rate-limited to
-    freq_ms, two-phase schedule). Observing the output of the
-    aggregation the pipeline runs anyway costs zero extra shuffles, and
-    because observing and routing both run on the micro-batch thread, the
-    routing table never changes while a batch reads it.
+    Runs as ``foreachBatch``: each micro-batch goes through the keyed
+    process stage ``keyed_process_agg`` under the controller's current
+    (sticky) routing table and is written to the ``PartialUpsertSink``
+    (per-epoch idempotent parquet upsert, merge-on-read, periodic
+    compaction — the Delta-MERGE analog). The controller then observes
+    per-key load inline, *from the partial that write just stored* — via
+    ``observe_candidates``, so only the bounded heavy-hitter candidate
+    set ever reaches the driver — and updates the routing for subsequent
+    batches (rate-limited to freq_ms, two-phase schedule). Observing the
+    output of the aggregation the pipeline runs anyway costs zero extra
+    shuffles, and because observing and routing both run on the
+    micro-batch thread, the routing table never changes while a batch
+    reads it. ``routing_history`` holds the routing each batch ran
+    under, one entry per batch.
+
+    Combinable streaming aggregates do not need the controller (see
+    ``keyed_process_agg``): attach them with ``attach_upsert`` and a
+    plain ``groupBy``. ``engine`` is accepted only as ``"process"``, the
+    one operator; any other value raises ``ValueError``.
     """
 
     def __init__(
@@ -578,35 +555,22 @@ class ReshapeStreamingAgg:
         spread_col: str,
         conf: ReshapeConf,
         sink: PartialUpsertSink,
-        engine: str = "relational",
+        engine: str = "process",
     ):
-        if engine not in ("relational", "process"):
-            raise ValueError(
-                f"engine must be 'relational' or 'process', got {engine!r}"
-            )
+        if engine != "process":
+            raise ValueError(f"engine must be 'process', got {engine!r}")
         self.key_col = key_col
         self.value_col = value_col
         self.spread_col = spread_col
         self.conf = conf
         self.sink = sink
-        # 'relational': Catalyst agg (map-side combine absorbs the skew
-        # itself; the controller is overhead-only — kept as the default
-        # because it IS the right plan for combinable aggs). 'process':
-        # keyed applyInPandas stage (no map-side combine — the Flink
-        # keyed-stream analog where the reroute genuinely pays).
-        self.engine = engine
         self.controller = ReshapeController(conf)
-        self.batches_seen = 0
         self.routing_history: list[dict] = []
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         routing = self.controller.routing() if self.conf.enabled else {}
         self.routing_history.append(dict(routing))
-        agg_impl = (
-            keyed_process_agg if self.engine == "process"
-            else salted_partial_merge_agg
-        )
-        agg = agg_impl(
+        agg = keyed_process_agg(
             batch_df, self.key_col, self.value_col, routing, self.spread_col
         )
         # the idempotent upsert write materializes the merged partial
@@ -628,7 +592,6 @@ class ReshapeStreamingAgg:
                 self.controller.hot_keys, total=rows_seen.get["total"] or 0,
             )
             self.controller.observe(candidates, total)
-        self.batches_seen += 1
 
     def attach(self, stream_df: DataFrame, checkpoint_dir: str):
         """Start the streaming query with this aggregator as the sink."""

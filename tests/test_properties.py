@@ -3,7 +3,7 @@ input — the randomized-testing layer the reference lacks (SURVEY §5.6)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -27,13 +27,16 @@ rows_strategy = st.lists(
 
 @SLOW
 @given(rows_strategy, st.dictionaries(st.integers(0, 5), st.integers(2, 9), max_size=3))
-def test_salted_agg_equals_plain_for_any_routing(spark, rows, routing):
-    from reshape_on_flink_spark.streaming.reshape import salted_partial_merge_agg
+@example(rows=[(0, 1, 5), (0, 2, -3), (1, 3, 7)], routing={})
+def test_keyed_process_agg_equals_plain_for_any_routing(spark, rows, routing):
+    """Exact per-key count/sum for any routing; the explicit example pins
+    the empty one (the plain keyed stage)."""
+    from reshape_on_flink_spark.streaming.reshape import keyed_process_agg
 
     df = spark.createDataFrame(rows, "k long, event_id long, v long")
     got = {
         r["k"]: (r["cnt"], r["sum_value"])
-        for r in salted_partial_merge_agg(df, "k", "v", routing, "event_id").collect()
+        for r in keyed_process_agg(df, "k", "v", routing, "event_id").collect()
     }
     expected = {}
     for k, _eid, v in rows:

@@ -1,5 +1,5 @@
 """Reshape skew-layer tests: controller schedule, exactness of the salted
-two-phase aggregation, and the load-spread improvement it buys."""
+keyed process stage, and the load-spread improvement it buys."""
 
 from __future__ import annotations
 
@@ -13,14 +13,22 @@ from reshape_on_flink_spark.streaming.reshape import (
     ReshapeConf,
     ReshapeController,
     ReshapeStreamingAgg,
+    keyed_process_agg,
     observe_candidates,
-    salted_partial_merge_agg,
 )
 from tests.conftest import SF_DIR
 
 
 def conf(parallelism=8, **kw) -> ReshapeConf:
     return ReshapeConf(parallelism=parallelism, freq_ms=0, **kw)
+
+
+def plain_partial(df):
+    """One epoch's merged (user_id, cnt, sum_value) partial for the sink
+    tests: the plain groupBy a combinable streaming aggregate writes."""
+    return df.groupBy("user_id").agg(
+        F.count("*").alias("cnt"), F.sum("value").alias("sum_value")
+    )
 
 
 class TestController:
@@ -72,6 +80,8 @@ class TestController:
 
 class TestSaltedAgg:
     def test_exact_vs_plain_agg(self, spark, tables):
+        """The keyed process stage over decimal values, three keys
+        routed, equals the groupBy."""
         ev = tables["events"]
         plain = {
             r["user_id"]: (r["cnt"], round(r["sum_value"], 6))
@@ -81,7 +91,7 @@ class TestSaltedAgg:
         }
         salted = {
             r["user_id"]: (r["cnt"], round(r["sum_value"], 6))
-            for r in salted_partial_merge_agg(
+            for r in keyed_process_agg(
                 ev.withColumn("value", F.col("value").cast("decimal(18,2)")),
                 "user_id",
                 "value",
@@ -100,7 +110,6 @@ class TestSaltedAgg:
         shape where the reference's reroute genuinely pays. Plain ==
         routed == relational on a skewed fixture (hot key 0 at 50%)."""
         from reshape_on_flink_spark.sources.readers import datagen
-        from reshape_on_flink_spark.streaming.reshape import keyed_process_agg
 
         df = datagen(spark, 20_000, n_keys=40, skew_hot_share=0.5).select(
             "id", "key", "value"
@@ -149,10 +158,10 @@ class TestSaltedAgg:
         finally:
             spark.conf.set(key, saved)
 
-    def test_process_engine_streaming_equals_relational(self, spark, tmp_dir):
-        """ReshapeStreamingAgg(engine='process') over a chunked zipf
-        replay with the controller ON == the relational engine's results
-        == the batch groupBy (and the controller engages on the hot key)."""
+    def test_streaming_agg_equals_groupby(self, spark, tmp_dir):
+        """ReshapeStreamingAgg over a chunked zipf replay with the
+        controller ON == the batch groupBy, and the controller engages on
+        the hot key."""
         from reshape_on_flink_spark.sources.readers import datagen
         from reshape_on_flink_spark.streaming.source import chunked_replay
 
@@ -165,28 +174,30 @@ class TestSaltedAgg:
             .agg(F.count("*").alias("cnt"), F.sum("value").alias("sv"))
             .collect()
         }
-        for engine in ("relational", "process"):
-            replay = os.path.join(tmp_dir, f"pe_{engine}")
-            ckpt = os.path.join(tmp_dir, f"pe_{engine}_ckpt")
-            stream = chunked_replay(spark, df, replay, n_chunks=4,
-                                    order_col="id")
-            sink = PartialUpsertSink(
-                spark, os.path.join(tmp_dir, f"pe_{engine}_sink"), "key"
-            )
-            agg = ReshapeStreamingAgg(
-                "key", "value", "id",
-                ReshapeConf(enabled=True, parallelism=8, freq_ms=0),
-                sink=sink, engine=engine,
-            )
-            q = agg.attach(stream, ckpt)
-            q.awaitTermination(120)
-            got = {
-                r["key"]: (r["cnt"], round(r["sum_value"], 6))
-                for r in sink.result_df().collect()
-            }
-            assert got == expected, engine
-            assert any(0 in r for r in agg.routing_history), (
-                f"{engine}: controller never engaged on the hot key"
+        stream = chunked_replay(spark, df, os.path.join(tmp_dir, "pe"),
+                                n_chunks=4, order_col="id")
+        sink = PartialUpsertSink(spark, os.path.join(tmp_dir, "pe_sink"), "key")
+        agg = ReshapeStreamingAgg(
+            "key", "value", "id",
+            ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=sink,
+        )
+        agg.attach(stream, os.path.join(tmp_dir, "pe_ckpt")).awaitTermination(120)
+        got = {
+            r["key"]: (r["cnt"], round(r["sum_value"], 6))
+            for r in sink.result_df().collect()
+        }
+        assert got == expected
+        assert any(0 in r for r in agg.routing_history), (
+            "controller never engaged on the hot key"
+        )
+
+    def test_engine_other_than_process_is_rejected(self):
+        """The keyed process stage is the one operator: the relational
+        engine is gone and asking for it fails loudly."""
+        with pytest.raises(ValueError, match="engine must be 'process'"):
+            ReshapeStreamingAgg(
+                "key", "value", "id", ReshapeConf(), sink=None,
+                engine="relational",
             )
 
     def test_spread_improvement_on_skewed_keys(self, spark):
@@ -231,7 +242,6 @@ class TestSaltedAgg:
             ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=sink,
         )
         agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(120)
-        assert agg.batches_seen == 4
         assert len(agg.routing_history) == 4
         assert not os.path.exists(os.path.join(sink.path, "CURRENT"))  # no snapshot
         expected = {
@@ -293,7 +303,7 @@ class TestScalePath:
         ev = tables["events"]
         chunks = [ev.filter(F.pmod(F.hash("event_id"), 3) == i) for i in range(3)]
         for epoch, chunk in enumerate(chunks):
-            merged = salted_partial_merge_agg(chunk, "user_id", "value", {}, "event_id")
+            merged = plain_partial(chunk)
             sink.write(merged, epoch)
         # epochs 0,1 compacted into the snapshot; epoch 2 is a live partial
         snap_dir, through = sink._load_current()
@@ -311,10 +321,10 @@ class TestScalePath:
             }
         assert current() == expected
         # replay of a live epoch: overwrites its own partial dir -> no change
-        sink.write(salted_partial_merge_agg(chunks[2], "user_id", "value", {}, "event_id"), 2)
+        sink.write(plain_partial(chunks[2]), 2)
         assert current() == expected
         # replay of an epoch already folded into the snapshot: skipped
-        sink.write(salted_partial_merge_agg(chunks[0], "user_id", "value", {}, "event_id"), 0)
+        sink.write(plain_partial(chunks[0]), 0)
         assert current() == expected
 
     def test_upsert_sink_crash_before_commit_preserves_old_state(self, spark, tables, tmp_dir):
@@ -326,7 +336,7 @@ class TestScalePath:
         ev = tables["events"]
         chunks = [ev.filter(F.pmod(F.hash("event_id"), 2) == i) for i in range(2)]
         for epoch, chunk in enumerate(chunks):
-            sink.write(salted_partial_merge_agg(chunk, "user_id", "value", {}, "event_id"), epoch)
+            sink.write(plain_partial(chunk), epoch)
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in ev.groupBy("user_id")
@@ -370,7 +380,7 @@ class TestScalePath:
         ev = tables["events"]
         chunks = [ev.filter(F.pmod(F.hash("event_id"), 2) == i) for i in range(2)]
         for epoch, chunk in enumerate(chunks):
-            sink.write(salted_partial_merge_agg(chunk, "user_id", "value", {}, "event_id"), epoch)
+            sink.write(plain_partial(chunk), epoch)
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in ev.groupBy("user_id")
@@ -383,23 +393,23 @@ class TestScalePath:
         # simulate the replayed epoch whose partial survived a crashed
         # cleanup: write epoch 0's partial straight into the store,
         # bypassing write()'s watermark check
-        salted_partial_merge_agg(chunks[0], "user_id", "value", {}, "event_id").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sink._partials, "epoch=0"))
+        plain_partial(chunks[0]).write.mode("overwrite").parquet(
+            os.path.join(sink._partials, "epoch=0")
+        )
         got = {
             r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
             for r in sink.result_df().collect()
         }
         assert got == expected  # stale partial filtered by the watermark
         # write() also refuses the replay outright
-        sink.write(salted_partial_merge_agg(chunks[0], "user_id", "value", {}, "event_id"), 0)
+        sink.write(plain_partial(chunks[0]), 0)
         got = {
             r["user_id"]: (r["cnt"], round(r["sum_value"], 4))
             for r in sink.result_df().collect()
         }
         assert got == expected
         # and the stale dir is garbage-collected by the next compact
-        sink.write(salted_partial_merge_agg(chunks[1], "user_id", "value", {}, "event_id"), 2)
+        sink.write(plain_partial(chunks[1]), 2)
         sink.compact()
         assert sink._partial_epochs() == []
 
@@ -416,7 +426,7 @@ class TestScalePath:
             ReshapeConf(enabled=True, parallelism=8, freq_ms=0), sink=sink,
         )
         agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(120)
-        assert agg.batches_seen == 4
+        assert len(agg.routing_history) == 4
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in tables["events"]
@@ -478,7 +488,7 @@ class TestControllerOnSkewedStream:
 
         # run 2: a restarted query on a fresh sink, same controller
         agg.sink = sink(2)
-        run2_start = agg.batches_seen
+        run2_start = len(agg.routing_history)
         assert run(2) == expected
         assert all(
             r.get(0) == 10 for r in agg.routing_history[run2_start:]
@@ -509,9 +519,9 @@ class TestControllerOnSkewedStream:
         )
         stream = chunked_replay(spark, df, os.path.join(tmp_dir, "replay"), n_chunks=4)
         agg.attach(stream, os.path.join(tmp_dir, "ckpt")).awaitTermination(180)
-        assert agg.batches_seen == 4
+        assert len(agg.routing_history) == 4
         assert sink._compacted_through() == 3  # epochs 1 and 3 compacted
-        assert agg.controller.iterations == agg.batches_seen
+        assert agg.controller.iterations == len(agg.routing_history)
         expected = {
             r["user_id"]: (r["cnt"], round(r["sv"], 4))
             for r in df.groupBy("user_id")
