@@ -113,9 +113,10 @@ HEADLINE = [
     # multi-pass keyed-scan shape with a branching per-start tree
     "q_cep_timeout_group_opt",
     # round 14: bounded inner quantifiers in group loops (dual runtime
-    # counters) — and since round 14 every multi-plan timeout query
-    # runs ONE consolidated match pass (match_recognize_multi) instead
-    # of one keyed shuffle per prefix plan
+    # counters) — and every timeout query runs ONE consolidated match
+    # pass (match_recognize_multi: every prefix plan, plus the full
+    # pattern under a skip strategy) instead of one keyed shuffle per
+    # plan
     "q_cep_timeout_group_times",
     # round 14 late: GREEDY inner loops in group loops — per-run sink
     # guard on the consolidated prefix enumerations + a 'gap' kill on

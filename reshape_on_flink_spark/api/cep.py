@@ -1406,7 +1406,10 @@ class PatternStream:
         self._after = after_match
         self._side_outputs: dict[str, DataFrame] = {}
 
-    def _run(self) -> tuple[DataFrame, list[str]]:
+    def _compiled(self) -> tuple[str, dict, list[str], dict]:
+        """The pattern compiled for this stream's skip strategy ->
+        (pattern string, define, user symbols, the keyword arguments
+        both match routes share)."""
         # no_skip enumerates EVERY loop expansion (Flink noSkip), so
         # default quantifiers must compile greedy; single-match skip
         # strategies take the first-completed expansion (reluctant).
@@ -1427,71 +1430,65 @@ class PatternStream:
             pat, define, user_syms, within = self._pattern.compile(
                 emit="all", lookahead_window=lookahead,
             )
-        tn = self._pattern._terminal_not  # (catalyst_cond, pandas_cond) | None
-        fluid = (
-            list(self._pattern._fluid_links or [])
-            + list(getattr(self._pattern, "_fluid_extra", None) or [])
-        ) or None
-        greedy_spans = list(self._pattern._greedy_spans or []) or None
         # relaxed-contiguity fillers: matches may not ANCHOR on one
         # (Flink computations start at their first TAKEN event)
         fillers = [k for k in define if k not in user_syms]
-        if self._df.isStreaming:
-            pandas_define = _build_pandas_define(self._pattern)
-            tn_name = None
-            if tn is not None:
-                if tn[1] is None:
-                    raise ValueError(
-                        "streaming CEP needs a vectorized pandas predicate "
-                        "on the terminal notFollowedBy stage"
-                    )
-                tn_name = "__notend"
-                pandas_define[tn_name] = tn[1]
-            out = streaming_match_recognize(
-                self._df,
-                self._keys,
-                self._order,
-                pat,
-                pandas_define,
-                input_cols=self._df.columns,
-                after_match=self._after,
-                within=within,
-                terminal_not=tn_name,
-                iter_define=self._pattern._iter_define or None,
-                filler_syms=fillers or None,
-                fluid_links=fluid,
-                greedy_spans=greedy_spans,
-            )
-        else:
-            only_pandas = [k for k, v in define.items() if v is None]
-            if only_pandas:
+        shared = dict(
+            after_match=self._after,
+            within=within,
+            iter_define=self._pattern._iter_define or None,
+            filler_syms=fillers or None,
+            fluid_links=list(self._pattern._fluid_links or []) or None,
+            greedy_spans=list(self._pattern._greedy_spans or []) or None,
+        )
+        return pat, define, user_syms, shared
+
+    def _batch_plan(self) -> tuple[dict, list[str]]:
+        """The batch match pass as :func:`match_recognize` keyword
+        arguments (one :func:`match_recognize_multi` plan), and the
+        user symbols ``flat_select`` keeps. A stage with only a pandas
+        predicate raises in the match pass's compile."""
+        pat, define, user_syms, shared = self._compiled()
+        tn = self._pattern._terminal_not  # (catalyst_cond, pandas_cond) | None
+        tn_name = None
+        if tn is not None:
+            if tn[0] is None:
                 raise ValueError(
-                    f"batch CEP needs Catalyst conditions; stages "
-                    f"{only_pandas} have only pandas predicates"
+                    "batch CEP needs a Catalyst condition on the "
+                    "terminal notFollowedBy stage"
                 )
-            tn_name = None
-            if tn is not None:
-                if tn[0] is None:
-                    raise ValueError(
-                        "batch CEP needs a Catalyst condition on the "
-                        "terminal notFollowedBy stage"
-                    )
-                tn_name = "__notend"
-                define = {**define, tn_name: tn[0]}
-            out = match_recognize(
-                self._df,
-                self._keys,
-                self._order,
-                pat,
-                define,
-                after_match=self._after,
-                within=within,
-                terminal_not=tn_name,
-                iter_define=self._pattern._iter_define or None,
-                filler_syms=fillers or None,
-                fluid_links=fluid,
-                greedy_spans=greedy_spans,
-            )
+            tn_name = "__notend"
+            define = {**define, tn_name: tn[0]}
+        plan = dict(pattern=pat, define=define, terminal_not=tn_name, **shared)
+        return plan, user_syms
+
+    def _run(self) -> tuple[DataFrame, list[str]]:
+        if not self._df.isStreaming:
+            plan, user_syms = self._batch_plan()
+            out = match_recognize(self._df, self._keys, self._order, **plan)
+            return out, user_syms
+        pat, _define, user_syms, shared = self._compiled()
+        pandas_define = _build_pandas_define(self._pattern)
+        tn = self._pattern._terminal_not  # (catalyst_cond, pandas_cond) | None
+        tn_name = None
+        if tn is not None:
+            if tn[1] is None:
+                raise ValueError(
+                    "streaming CEP needs a vectorized pandas predicate "
+                    "on the terminal notFollowedBy stage"
+                )
+            tn_name = "__notend"
+            pandas_define[tn_name] = tn[1]
+        out = streaming_match_recognize(
+            self._df,
+            self._keys,
+            self._order,
+            pat,
+            pandas_define,
+            input_cols=self._df.columns,
+            terminal_not=tn_name,
+            **shared,
+        )
         return out, user_syms
 
     def flat_select(
@@ -1752,7 +1749,8 @@ class PatternStream:
         between-plans; times_or_more(n>=2) minima gate the same way);
         iterative conditions under a STREAMING skip strategy (the
         incremental cursor threads a flag-carrying IterativeCondition
-        context); and every plan's prefix enumeration runs in ONE
+        context); and every plan's prefix enumeration — plus, under a
+        skip strategy, the full pattern's sequential pass — runs in ONE
         consolidated match pass (match_recognize_multi) instead of one
         keyed shuffle per parked shape.
 
@@ -3517,15 +3515,7 @@ class PatternStream:
             collapse to one emitted partial (NFAITCase compares sets).
             Returns (branch rows, surviving-branch summaries); the
             skip-strategy prune filter and final join happen outside."""
-            rows = multi_rows.get(tag)
-            if rows is None:
-                pre = Pattern()
-                pre._stages = pre_stages
-                pre._within = within
-                pre._fluid_extra = _fluid_specs(pre_stages)
-                rows = PatternStream(
-                    base, pre, keys, order, "no_skip"
-                ).flat_select()
+            rows = multi_rows[tag]
             # Round 14 (guide §7.3, measured): this builder emitted
             # ~7k py4j round trips per query — every Column operator is
             # a socket round trip, and the build was 1.4-1.9 s of the
@@ -3746,107 +3736,57 @@ class PatternStream:
                 )
             return rows, surv, dead
 
-        # one-pass plan-id consolidation (round 14, profiled in
-        # BASELINE.md round 13): with >1 prefix plans, every plan used
-        # to run its own match_recognize pass — repartition + sort +
-        # pandas scan over the SAME base relation — and the G-plan
-        # family was measured scan-dominated (q_cep_timeout_group_opt:
-        # 5 passes, ~0.72 est. scan share). All plans now run in ONE
-        # keyed shuffle via match_recognize_multi, and the shared frame
-        # is persisted because each plan's aggregation + final join
-        # reference it again (block-level cache locks make concurrent
-        # union arms compute it once). Equality with the per-plan route
-        # is pytest-pinned; the per-plan path stays as the fallback for
-        # single-plan patterns and the defensive corners below.
-        multi_rows: dict[str, DataFrame] = {}
-        full_tag = None
-        if len(plans) > 1:
-            lookahead = W.partitionBy(*keys).orderBy(*order)
-            specs: list[dict] = []
-            for pre_stages, _spans, tag, _primary, _copies, _gate in plans:
-                pre = Pattern()
-                pre._stages = pre_stages
-                pre._within = within
-                pat_p, define_p, user_p, within_p = pre.compile(
-                    emit="all", lookahead_window=lookahead
-                )
-                if pre._terminal_not is not None or any(
-                    define_p[s] is None for s in define_p
-                ):
-                    # trailing NOTs are stripped by _prefix_raw and the
-                    # batch route requires Catalyst defines, so neither
-                    # should occur — fall back to per-plan passes if a
-                    # future shape ever lands here
-                    specs = []
-                    break
-                specs.append(dict(
-                    pattern=pat_p,
-                    define=define_p,
-                    tag=tag,
-                    user_syms=list(user_p),
-                    within=within_p,
-                    iter_define=pre._iter_define or None,
-                    filler_syms=[
-                        k for k in define_p if k not in user_p
-                    ] or None,
-                    fluid_links=(
-                        list(pre._fluid_links or [])
-                        + _fluid_specs(pre_stages)
-                    ) or None,
-                    greedy_spans=list(pre._greedy_spans or []) or None,
-                ))
-            if specs and skip_mode != "no_skip" and not terminal_tn:
-                # the skip route's full-pattern sequential pass joins
-                # the consolidated shuffle (round 14, late): the
-                # separate mrows pass re-paid the repartition + sort +
-                # Arrow transfer of the SAME base relation (round-13
-                # decomposition: 3.3 s of q_cep_timeout_skip's 11.3 s
-                # at sf0.1 was that pass alone)
-                f_pat, f_def, f_usr, f_win = pattern.compile(
-                    emit="first", lookahead_window=lookahead
-                )
-                seq_enum = False
-                if pattern._fluid_links or pattern._greedy_spans:
-                    f_pat, f_def, f_usr, f_win = pattern.compile(
-                        emit="all", lookahead_window=lookahead
-                    )
-                    seq_enum = True
-                if (
-                    pattern._terminal_not is None
-                    and all(f_def[s2] is not None for s2 in f_def)
-                ):
-                    full_tag = "__full"
-                    specs.append(dict(
-                        pattern=f_pat,
-                        define=f_def,
-                        tag=full_tag,
-                        user_syms=list(f_usr),
-                        within=f_win,
-                        iter_define=pattern._iter_define or None,
-                        filler_syms=[
-                            k for k in f_def if k not in f_usr
-                        ] or None,
-                        fluid_links=list(
-                            pattern._fluid_links or []
-                        ) or None,
-                        greedy_spans=list(
-                            pattern._greedy_spans or []
-                        ) or None,
-                        after_match=self._after,
-                        seq_enum=seq_enum,
-                    ))
-            if specs:
-                from pyspark import StorageLevel
+        # ONE consolidated match pass for any plan count: every prefix
+        # plan, plus the skip route's full-pattern sequential plan, runs
+        # in one keyed shuffle via match_recognize_multi. A pass per plan
+        # re-pays the repartition + sort + pandas scan of the SAME base
+        # relation (BASELINE.md round 13: q_cep_timeout_group_opt ran 5
+        # passes, ~0.72 est. scan share). The shared frame is persisted
+        # because each plan's aggregation + final join reference it
+        # again (block-level cache locks make concurrent union arms
+        # compute it once).
+        lookahead = W.partitionBy(*keys).orderBy(*order)
+        specs: list[dict] = []
+        for pre_stages, _spans, tag, _primary, _copies, _gate in plans:
+            pre = Pattern()
+            pre._stages = pre_stages
+            pre._within = within
+            pat_p, define_p, user_p, within_p = pre.compile(
+                emit="all", lookahead_window=lookahead
+            )
+            # _prefix_raw strips trailing NOT stages, so a prefix never
+            # ends in a terminal notFollowedBy
+            assert pre._terminal_not is None, tag
+            specs.append(dict(
+                pattern=pat_p,
+                define=define_p,
+                tag=tag,
+                user_syms=list(user_p),
+                within=within_p,
+                iter_define=pre._iter_define or None,
+                filler_syms=[k for k in define_p if k not in user_p] or None,
+                fluid_links=(
+                    list(pre._fluid_links or []) + _fluid_specs(pre_stages)
+                ) or None,
+                greedy_spans=list(pre._greedy_spans or []) or None,
+            ))
+        full_tag = "__full"
+        if skip_mode != "no_skip":
+            # the skip route's full-pattern pass: the same sequential
+            # plan flat_select runs (the round-13 decomposition put
+            # 3.3 s of q_cep_timeout_skip's 11.3 s at sf0.1 in a
+            # separate pass that re-paid the shuffle of the SAME base)
+            full, full_usr = self._batch_plan()
+            specs.append(dict(full, tag=full_tag, user_syms=list(full_usr)))
+        from pyspark import StorageLevel
 
-                shared = match_recognize_multi(
-                    base, keys, order, specs
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                multi_rows = {
-                    s["tag"]: shared.where(
-                        F.col("__plan") == s["tag"]
-                    ).drop("__plan")
-                    for s in specs
-                }
+        shared = match_recognize_multi(base, keys, order, specs).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        multi_rows = {
+            s["tag"]: shared.where(F.col("__plan") == s["tag"]).drop("__plan")
+            for s in specs
+        }
 
         frames = [(_timeouts(*plan), plan[2]) for plan in plans]
 
@@ -3885,13 +3825,7 @@ class PatternStream:
                 F.max("__horizon").alias("__horizon"),
                 F.min("__gate").alias("__gate"),
             )
-            mrows = (
-                multi_rows.get(full_tag) if full_tag is not None else None
-            )
-            if mrows is None:
-                mrows = PatternStream(
-                    base, pattern, keys, order, self._after
-                ).flat_select()
+            mrows = multi_rows[full_tag]
             if skip_mode == "past_last_row":
                 prid = F.max("__to_rid")
             elif skip_mode == "to_next_row":

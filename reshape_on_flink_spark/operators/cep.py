@@ -48,6 +48,7 @@ by semantics, as in Flink).
 
 from __future__ import annotations
 
+import dataclasses
 import re
 
 import numpy as np
@@ -969,6 +970,209 @@ def _build_ic(pdf, symbols: list[str], n_cols: int, iter_define,
     return ic
 
 
+@dataclasses.dataclass(frozen=True)
+class _MatchPlan:
+    """One compiled MATCH_RECOGNIZE pass (built on the driver, shipped to
+    the Python workers): the route its skip strategy takes and the
+    matcher or enumerator that route needs, the scan accelerators, and
+    the candidate filters. Both batch harnesses scan with it — the
+    chunked scan of :func:`match_recognize_multi` and the grouped
+    reference harness of :func:`match_recognize`."""
+
+    tag: str
+    symbols: list
+    terminal_not: str | None  # extra flag column after the symbols'
+    skip_mode: str
+    skip_sym: str | None
+    # enumerate + filter every expansion per start (NO_SKIP, terminal
+    # NOT, fluid links, greedy spans) instead of the backtracking matcher
+    use_enum: bool
+    enum_at: object
+    match_at: object
+    rx: object  # bitmask regex scan (None beyond _RX_MAX_SYMBOLS)
+    first_idx: list
+    fl_idx: object
+    filler_idx: frozenset
+    fluid_links: list | None
+    greedy_spans: list | None
+    iter_define: dict | None
+    timer_service: object
+    within: object
+    user_idx: frozenset  # symbols kept in the output
+
+    @property
+    def flag_syms(self) -> list:
+        """Symbols with a flag column, in bools order."""
+        return self.symbols + (
+            [self.terminal_not] if self.terminal_not is not None else []
+        )
+
+
+def _compile_plan(
+    pattern: str,
+    define: dict,
+    tag: str = "0",
+    user_syms: list[str] | None = None,
+    after_match: str = "no_skip",
+    within=None,
+    terminal_not: str | None = None,
+    iter_define: dict | None = None,
+    filler_syms: list[str] | None = None,
+    fluid_links: list | None = None,
+    greedy_spans: list | None = None,
+    timer_service=None,
+) -> tuple[_MatchPlan, list[Column]]:
+    """Parse and check one pass (arguments as in :func:`match_recognize`;
+    ``user_syms=None`` keeps every symbol) -> (plan, its flag Columns in
+    ``plan.flag_syms`` order). Flat patterns without iterative
+    conditions keep the specialized flat matcher; everything else runs
+    the AST matcher (property-tested equal)."""
+    iter_define = dict(iter_define) if iter_define else None
+    fluid_links = list(fluid_links or []) or None
+    greedy_spans = list(greedy_spans or []) or None
+    if _is_flat(pattern):
+        toks = parse_pattern(pattern)
+        symbols = pattern_symbols(toks)
+        ast = _flat_to_ast(toks)
+        first_idx = _first_idx_flat(symbols, toks)
+    else:  # nested groups / bounded quantifiers -> generic AST matcher
+        toks = None
+        ast = parse_pattern_ast(pattern)
+        symbols = ast_symbols(ast)
+        first_idx = _first_idx_ast(symbols, ast)
+    if iter_define:
+        unknown = [s for s in iter_define if s not in symbols]
+        if unknown:
+            raise ValueError(f"iter_define for symbols not in the pattern: {unknown}")
+        # a purely-iterative symbol has no static column: flag all rows
+        # as statically viable, the iterative check decides per branch
+        define = {**{s: F.lit(True) for s in iter_define if s not in define}, **define}
+    missing = [s for s in symbols if s not in define]
+    if missing:
+        raise ValueError(f"pattern symbols without DEFINE: {missing}")
+    skip_mode, skip_sym = _parse_after_match(after_match, symbols)
+    if terminal_not is not None:
+        if within is None:
+            raise ValueError(
+                "terminal_not requires a within bound (Flink allows "
+                "terminal notFollowedBy only with within, Pattern.java:304)"
+            )
+        if terminal_not in symbols:
+            raise ValueError(
+                f"terminal_not symbol {terminal_not!r} also appears in the pattern"
+            )
+        if terminal_not not in define:
+            raise ValueError(f"terminal_not symbol {terminal_not!r} has no DEFINE")
+    flag_syms = symbols + ([terminal_not] if terminal_not is not None else [])
+    only_pandas = [s for s in flag_syms if define[s] is None]
+    if only_pandas:
+        raise ValueError(
+            f"batch CEP needs Catalyst conditions; stages "
+            f"{only_pandas} have only pandas predicates"
+        )
+    use_enum = bool(
+        skip_mode == "no_skip" or terminal_not is not None
+        or fluid_links or greedy_spans
+    )
+    if use_enum:
+        match_at = None
+    elif toks is not None and not iter_define:
+        match_at = _matcher(symbols, toks)
+    else:  # iterative conditions evaluate per-branch -> AST matcher only
+        match_at = _ast_matcher(symbols, ast)
+    user_set = set(symbols if user_syms is None else user_syms)
+    plan = _MatchPlan(
+        tag=str(tag),
+        symbols=symbols,
+        terminal_not=terminal_not,
+        skip_mode=skip_mode,
+        skip_sym=skip_sym,
+        use_enum=use_enum,
+        enum_at=_ast_enumerator(symbols, ast) if use_enum else None,
+        match_at=match_at,
+        rx=_bitmask_regex(symbols, ast),
+        first_idx=first_idx,
+        fl_idx=_fluid_index(symbols) if (fluid_links or greedy_spans) else None,
+        filler_idx=frozenset(
+            symbols.index(s) for s in (filler_syms or ()) if s in symbols
+        ),
+        fluid_links=fluid_links,
+        greedy_spans=greedy_spans,
+        iter_define=iter_define,
+        timer_service=timer_service,
+        within=within,
+        user_idx=frozenset(i for i, s in enumerate(symbols) if s in user_set),
+    )
+    return plan, [F.coalesce(define[s], F.lit(False)) for s in flag_syms]
+
+
+def _candidates(pl: _MatchPlan, bools, start: int, hi: int, ic) -> list:
+    """Every surviving expansion starting at ``start`` (horizon ``hi``):
+    the enumerator's candidates through the plan's filters."""
+    cands = pl.enum_at(bools, start, hi, ic)
+    filler_idx = pl.filler_idx
+    if filler_idx:  # drop filler-anchored candidates
+        cands = [m for m in cands if m[0][1] not in filler_idx]
+        # Flink match identity = the variable->events assignment:
+        # candidates differing only in FILLER rows are one match
+        # (interchangeable gap splits around absent optional stages)
+        # -> dedup on the user-row projection
+        seen_u, uniq = set(), []
+        for m in cands:
+            ku = tuple(r for r in m if r[1] not in filler_idx)
+            if ku not in seen_u:
+                seen_u.add(ku)
+                uniq.append(m)
+        cands = uniq
+    if pl.fluid_links:
+        cands = [m for m in cands if _fluid_ok(m, bools, pl.fl_idx, pl.fluid_links)]
+    if pl.greedy_spans:
+        cands = [
+            m for m in cands
+            if _greedy_ok(m, bools, pl.fl_idx, pl.greedy_spans, filler_idx)
+        ]
+    if pl.terminal_not is not None:
+        # terminal NOT: no flagged row in (last row, horizon); each
+        # expansion is an independent NFA branch, filtered on its own
+        tn = bools[len(pl.symbols)]
+        cands = [
+            m for m in cands
+            if not np.asarray(tn[m[-1][0] + 1 : hi], dtype=bool).any()
+        ]
+    return cands
+
+
+def _first_match(pl: _MatchPlan, bools, start: int, hi: int, ic):
+    """The single-match route's match at ``start``: the first-completed
+    (fewest rows, then earliest positions) surviving expansion when the
+    plan enumerates, the backtracking matcher's otherwise; None when
+    there is none or it anchors on a filler (it is found again at its
+    first real row)."""
+    if pl.use_enum:
+        cands = _candidates(pl, bools, start, hi, ic)
+        if not cands:
+            return None
+        return min(cands, key=lambda m: (len(m), [p for p, _ in m]))
+    m = pl.match_at(bools, start, hi, ic)
+    if m and pl.filler_idx and m[0][1] in pl.filler_idx:
+        return None
+    return m
+
+
+def _horizon(within, pdf, order_col: str):
+    """``bound(i, hi)``: the last row (exclusive) a match starting at row
+    ``i`` may reach — ``hi`` clamped by the WITHIN bound."""
+    if within is None:
+        return lambda i, hi: hi
+    tv, is_time = _time_axis(pdf, order_col)
+    delta = _within_delta(within, is_time)
+
+    def bound(i: int, hi: int) -> int:
+        return min(hi, i + int(np.searchsorted(tv[i:hi], tv[i] + delta, side="left")))
+
+    return bound
+
+
 def match_recognize(
     df: DataFrame,
     partition_by: str | list[str],
@@ -1012,14 +1216,16 @@ def match_recognize(
     ``impl`` selects the execution harness (identical results, pinned by
     ``test_cep_chunked_equals_grouped``):
 
-    - ``"chunked"`` (default): repartition on the key + sort within
-      partitions + ``mapInPandas`` with key-boundary carry across Arrow
-      batches. Thousands of keys share one Arrow chunk, so per-key
+    - ``"chunked"`` (default): this pass as the one plan of
+      :func:`match_recognize_multi` — repartition on the key + sort
+      within partitions + ``mapInPandas`` with key-boundary carry across
+      Arrow batches. Thousands of keys share one Arrow chunk, so per-key
       overhead amortizes — measured 2-3x faster than grouped-map on
       1500-key fixtures, and the margin grows with key count (the 100 TB
       case is millions of keys).
-    - ``"grouped"``: one ``applyInPandas`` group per key. Simpler;
-      kept as the reference harness.
+    - ``"grouped"``: one ``applyInPandas`` group per key with its own
+      per-key scan loop. Simpler; kept as the reference harness the
+      equality tests compare the chunked scan against.
 
     ``within`` is Flink's time-bounded pattern (SQL ``PATTERN (...)
     WITHIN INTERVAL ...``; CEP ``Pattern.within`` — flink-libraries/
@@ -1069,88 +1275,40 @@ def match_recognize(
     (IterativeConditionsITCase.testIterativeWithLoopingStarting
     expects ONE bare {end} match).
     """
+    plan = dict(
+        pattern=pattern,
+        define=define,
+        after_match=after_match,
+        within=within,
+        terminal_not=terminal_not,
+        iter_define=iter_define,
+        filler_syms=filler_syms,
+        fluid_links=fluid_links,
+        greedy_spans=greedy_spans,
+        timer_service=timer_service,
+    )
+    if impl == "chunked":
+        return match_recognize_multi(
+            df, partition_by, order_by, [plan]
+        ).drop("__plan")
+    if impl != "grouped":
+        raise ValueError(f"impl must be 'chunked' or 'grouped', got {impl!r}")
+
     partition_by = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-    iter_define = dict(iter_define) if iter_define else None
-    if _is_flat(pattern):
-        toks = parse_pattern(pattern)
-        symbols = pattern_symbols(toks)
-        ast = _flat_to_ast(toks)
-        # iterative conditions evaluate per-branch -> AST matcher only
-        matcher = _ast_matcher(symbols, ast) if iter_define else _matcher(symbols, toks)
-        first_idx = _first_idx_flat(symbols, toks)
-        rx = _bitmask_regex(symbols, ast)
-    else:  # nested groups / bounded quantifiers -> generic AST matcher
-        ast = parse_pattern_ast(pattern)
-        symbols = ast_symbols(ast)
-        matcher = _ast_matcher(symbols, ast)
-        first_idx = _first_idx_ast(symbols, ast)
-        rx = _bitmask_regex(symbols, ast)
-    if iter_define:
-        unknown = [s for s in iter_define if s not in symbols]
-        if unknown:
-            raise ValueError(f"iter_define for symbols not in the pattern: {unknown}")
-        # a purely-iterative symbol has no static column: flag all rows
-        # as statically viable, the iterative check decides per branch
-        define = {**{s: F.lit(True) for s in iter_define if s not in define}, **define}
-    missing = [s for s in symbols if s not in define]
-    if missing:
-        raise ValueError(f"pattern symbols without DEFINE: {missing}")
-
-    skip_mode, skip_sym = _parse_after_match(after_match, symbols)
-    if terminal_not is not None:
-        if within is None:
-            raise ValueError(
-                "terminal_not requires a within bound (Flink allows "
-                "terminal notFollowedBy only with within, Pattern.java:304)"
-            )
-        if terminal_not in symbols:
-            raise ValueError(
-                f"terminal_not symbol {terminal_not!r} also appears in the pattern"
-            )
-        if terminal_not not in define:
-            raise ValueError(f"terminal_not symbol {terminal_not!r} has no DEFINE")
-    enum_at = (
-        _ast_enumerator(symbols, ast)
-        if (skip_mode == "no_skip" or terminal_not is not None
-            or fluid_links or greedy_spans)
-        else None
-    )
-    all_syms = symbols + ([terminal_not] if terminal_not is not None else [])
-    tn_idx = len(symbols)  # bools index of the terminal-not flag column
-    fl_idx = (
-        _fluid_index(symbols) if (fluid_links or greedy_spans) else None
-    )
-    filler_idx = frozenset(
-        symbols.index(s) for s in (filler_syms or ()) if s in symbols
-    )
-
+    pl, flags = _compile_plan(**plan)
+    symbols = pl.symbols
+    sym_cols = [f"__sym_{s}" for s in pl.flag_syms]
     # one select, not one withColumn per symbol (each withColumn rebuilds
     # and re-analyzes the whole plan — guide §7.3 driver-side cost)
-    flagged = df.select(
-        "*",
-        *[
-            F.coalesce(define[s], F.lit(False)).alias(f"__sym_{s}")
-            for s in all_syms
-        ],
-    )
+    flagged = df.select("*", *[c.alias(n) for c, n in zip(flags, sym_cols)])
 
     out_fields = [f for f in df.schema.fields]
     schema_out = (
         ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
         + ", match_id bigint, matched_symbol string"
     )
-    match_at = matcher
     data_cols = [f.name for f in out_fields]
-    sym_cols = [f"__sym_{s}" for s in all_syms]
-
-    def _nf_survivors(cands, bools, hi):
-        """Drop expansions with a terminal-not row in (last_row, horizon)."""
-        return [
-            m
-            for m in cands
-            if not np.asarray(bools[tn_idx][m[-1][0] + 1 : hi], dtype=bool).any()
-        ]
 
     def process_group(pdf):
         import pandas as pd
@@ -1158,23 +1316,17 @@ def match_recognize(
         pdf = pdf.sort_values(order_by, kind="mergesort").reset_index(drop=True)
         n = len(pdf)
         bools = [pdf[c].to_numpy() for c in sym_cols]
-        ic = _build_ic(pdf, symbols, len(all_syms), iter_define,
-                       order_by[0], timer_service)
-        if within is not None:
-            tv, is_time = _time_axis(pdf, order_by[0])
-            delta = _within_delta(within, is_time)
-
-            def bound(i: int, hi: int) -> int:
-                return min(hi, i + int(np.searchsorted(tv[i:hi], tv[i] + delta, side="left")))
-        else:
-            bound = lambda i, hi: hi  # noqa: E731
+        ic = _build_ic(pdf, symbols, len(symbols), pl.iter_define,
+                       order_by[0], pl.timer_service)
+        bound = _horizon(pl.within, pdf, order_by[0])
         # scan accelerators: the bitmask regex finds the next match
         # start in C (same branch priority as the matcher — property-
         # tested); fallback is the first-set skip mask. Encode ONLY the
         # pattern symbols — the terminal_not flag is not an rx class.
+        rx = pl.rx
         enc = _encode_bitmask_str(bools[: len(symbols)], n) if rx is not None else None
         can_start = (
-            np.logical_or.reduce([np.asarray(bools[j], dtype=bool) for j in first_idx])
+            np.logical_or.reduce([np.asarray(bools[j], dtype=bool) for j in pl.first_idx])
             if rx is None and n
             else None
         )
@@ -1192,64 +1344,23 @@ def match_recognize(
             elif not can_start[i]:
                 i += 1
                 continue
-            if enum_at is not None:  # NO_SKIP and/or terminal_not: enumerate
-                hi = bound(i, n)
-                cands = enum_at(bools, i, hi, ic)
-                if filler_idx:  # drop filler-anchored candidates
-                    cands = [m for m in cands if m[0][1] not in filler_idx]
-                    # Flink match identity = the variable->events
-                    # assignment: candidates differing only in FILLER
-                    # rows are one match (interchangeable gap splits
-                    # around absent optional stages) -> dedup on the
-                    # user-row projection
-                    seen_u, uniq = set(), []
-                    for mm_ in cands:
-                        ku = tuple(r for r in mm_ if r[1] not in filler_idx)
-                        if ku not in seen_u:
-                            seen_u.add(ku)
-                            uniq.append(mm_)
-                    cands = uniq
-                if fluid_links:
-                    cands = [
-                        m for m in cands
-                        if _fluid_ok(m, bools, fl_idx, fluid_links)
-                    ]
-                if greedy_spans:
-                    cands = [
-                        m for m in cands
-                        if _greedy_ok(m, bools, fl_idx, greedy_spans,
-                                      filler_idx)
-                    ]
-                if terminal_not is not None:
-                    cands = _nf_survivors(cands, bools, hi)
-                if skip_mode == "no_skip":
-                    for m in cands:
-                        for pos, si in m:
-                            rows_idx.append(pos)
-                            match_ids.append(mid)
-                            matched_syms.append(symbols[si])
-                        mid += 1
-                    i += 1
-                elif cands:  # single-match: first-completed survivor
-                    m = min(cands, key=lambda mm: (len(mm), [p for p, _ in mm]))
+            hi = bound(i, n)
+            if pl.skip_mode == "no_skip":
+                for m in _candidates(pl, bools, i, hi, ic):
                     for pos, si in m:
                         rows_idx.append(pos)
                         match_ids.append(mid)
                         matched_syms.append(symbols[si])
-                    i = _resume_pos(m, skip_mode, skip_sym, symbols)
                     mid += 1
-                else:
-                    i += 1
+                i += 1
                 continue
-            m = match_at(bools, i, bound(i, n), ic)
-            if m and filler_idx and m[0][1] in filler_idx:
-                m = None  # filler-anchored: re-found at its first real row
+            m = _first_match(pl, bools, i, hi, ic)
             if m:  # empty match advances
                 for pos, si in m:
                     rows_idx.append(pos)
                     match_ids.append(mid)
                     matched_syms.append(symbols[si])
-                i = _resume_pos(m, skip_mode, skip_sym, symbols)
+                i = _resume_pos(m, pl.skip_mode, pl.skip_sym, symbols)
                 mid += 1
             else:
                 i += 1
@@ -1258,142 +1369,180 @@ def match_recognize(
         out["matched_symbol"] = pd.Series(matched_syms, index=out.index)
         return out
 
-    if impl == "grouped":
-        from reshape_on_flink_spark.session import (
-            PYTHON_STAGE_TASK_BYTES,
-            repartition_for_python_stage,
+    from reshape_on_flink_spark.session import (
+        PYTHON_STAGE_TASK_BYTES,
+        repartition_for_python_stage,
+    )
+
+    return (
+        repartition_for_python_stage(
+            flagged, list(partition_by), task_bytes=PYTHON_STAGE_TASK_BYTES
         )
+        .groupBy(*partition_by)
+        .applyInPandas(process_group, schema=schema_out)
+    )
 
-        return (
-            repartition_for_python_stage(
-                flagged, list(partition_by), task_bytes=PYTHON_STAGE_TASK_BYTES
-            )
-            .groupBy(*partition_by)
-            .applyInPandas(process_group, schema=schema_out)
-        )
-    if impl != "chunked":
-        raise ValueError(f"impl must be 'chunked' or 'grouped', got {impl!r}")
 
-    part_cols = list(partition_by)
+def match_recognize_multi(
+    df: DataFrame,
+    partition_by: str | list[str],
+    order_by: str | list[str],
+    plans: list[dict],
+) -> DataFrame:
+    """N match passes in ONE keyed shuffle — the one chunked batch scan.
 
-    def scan_chunk(pdf, starts):
-        """All complete keys of one (already key-sorted) chunk in ONE
-        regex pass: keys are joined with a zero-bitmask separator char
-        (matches no symbol class, so a match can never cross a key), and
-        the matcher is bounded to each key's end row. String pos of row
-        r in group g is r + g (one separator per earlier group)."""
+    Motivation (BASELINE.md round-13 pass-count profile): the timeout
+    side output's prefix plans each ran a full ``match_recognize`` pass
+    — repartition + sort + the pandas scan — over the SAME base
+    relation, and the G-plan family was measured scan-DOMINATED
+    (q_cep_timeout_group_opt: 5 passes, ~0.72 estimated scan share).
+    This runs every plan inside one ``repartition(keys) +
+    sortWithinPartitions + mapInPandas`` stage, tagging output rows
+    with ``__plan``, so the base computation, shuffle, sort and Arrow
+    transfer are paid once regardless of plan count. At cluster scale
+    the saving compounds: one wide shuffle of the event relation
+    instead of one per parked-branch shape. ``match_recognize``'s
+    chunked harness is this scan with one plan.
+
+    Each plan dict: ``pattern`` (string), ``define`` (symbol ->
+    Catalyst Column), ``tag`` (the ``__plan`` value), ``user_syms``
+    (symbols kept in the output — ``flat_select``'s filter, applied at
+    emission time; omitted = every symbol), plus optional
+    ``after_match`` (default ``no_skip``) / ``within`` /
+    ``terminal_not`` / ``iter_define`` / ``filler_syms`` /
+    ``fluid_links`` / ``greedy_spans`` / ``timer_service`` with
+    :func:`match_recognize` semantics.
+
+    Contract (pinned by ``test_cep_multi_pass_equals_singles`` and
+    ``test_cep_multi_sequential_equals_single``): for every plan, the
+    rows with ``__plan == tag`` equal the grouped reference harness
+    ``match_recognize(df, keys, order, pattern, define, ...,
+    impl="grouped")`` filtered to ``user_syms`` — the multi pass is a
+    scheduling change only.
+
+    Scan: the keys of one Arrow chunk are joined into ONE bitmask
+    string with a zero-bitmask separator char (it matches no symbol
+    class, so a match can never cross a key), and the matcher is
+    bounded to each key's end row. String position of row r in key g is
+    r + g (one separator per earlier key).
+    """
+    partition_by = (
+        [partition_by] if isinstance(partition_by, str) else list(partition_by)
+    )
+    order_by = [order_by] if isinstance(order_by, str) else list(order_by)
+
+    compiled = []
+    flag_cols: list = []  # (name, Column) — appended in ONE select below
+    for j, p in enumerate(plans):
+        pl, flags = _compile_plan(**p)
+        sym_cols = [f"__p{j}_{s}" for s in pl.flag_syms]
+        flag_cols.extend(zip(sym_cols, flags))
+        # per-plan rename so _IterCtx row dicts expose the __sym_{name}
+        # static flags the compiler's iterative filler lambdas read
+        # (e.get(f"__sym_{name}", True))
+        ren = {c: f"__sym_{s}" for s, c in zip(pl.flag_syms, sym_cols)}
+        compiled.append((pl, sym_cols, ren))
+
+    # ONE select instead of one withColumn per symbol per plan: each
+    # withColumn rebuilds (and re-analyzes) the whole logical plan, so a
+    # 5-plan x 6-symbol timeout family paid ~30 plan rebuilds of driver
+    # wall per query build (guide §7.3 — measured: q_cep_timeout_group_*
+    # spent 1.4-3.8 s, ~half the query, in DataFrame construction).
+    flagged = df.select("*", *[col.alias(c) for c, col in flag_cols])
+
+    out_fields = list(df.schema.fields)
+    data_cols = [f.name for f in out_fields]
+    schema_out = (
+        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
+        + ", match_id bigint, matched_symbol string, __plan string"
+    )
+
+    def scan_plan(pl: _MatchPlan, sym_cols, ren, pdf, starts, ends):
+        """Rows of ``pl``'s matches over the complete keys of one
+        (already key-sorted) chunk, or None."""
         import pandas as pd
 
-        n = len(pdf)
+        n, G = len(pdf), len(starts)
+        symbols, user_idx = pl.symbols, pl.user_idx
         bools = [pdf[c].to_numpy() for c in sym_cols]
-        ic = _build_ic(pdf, symbols, len(all_syms), iter_define,
-                       order_by[0], timer_service)
-        G = len(starts)
-        ends = np.append(starts[1:], n)
-        if within is not None:
-            tv, is_time = _time_axis(pdf, order_by[0])
-            delta = _within_delta(within, is_time)
-
-            def bound(i: int, hi: int) -> int:
-                return min(hi, i + int(np.searchsorted(tv[i:hi], tv[i] + delta, side="left")))
-        else:
-            bound = lambda i, hi: hi  # noqa: E731
-        if rx is None:  # >12 symbols: per-key matcher fallback
-            frames = [
-                process_group(pdf.iloc[s:e]) for s, e in zip(starts.tolist(), ends.tolist())
-            ]
-            frames = [f for f in frames if len(f)]
-            return pd.concat(frames, ignore_index=True) if frames else None
-
-        acc = np.zeros(n, dtype=np.int32)
-        for b, col in enumerate(bools[: len(symbols)]):  # tn flag is no rx class
-            acc += np.asarray(col, dtype=np.int32) << b
-        acc += _RX_BASE
-        s_all = "".join(map(chr, acc.tolist()))
-        sep = chr(_RX_BASE)  # bitmask 0: no symbol class contains it
-        enc = sep.join(s_all[s:e] for s, e in zip(starts.tolist(), ends.tolist()))
-        group_strstart = starts + np.arange(G)
-
-        rows_idx, match_ids, matched_syms = [], [], []
+        ic = (
+            _build_ic(pdf.rename(columns=ren), symbols, len(symbols),
+                      pl.iter_define, order_by[0], pl.timer_service)
+            if pl.iter_define else None
+        )
+        bound = _horizon(pl.within, pdf, order_by[0])
+        rows_idx: list = []
+        match_ids: list = []
+        matched_syms: list = []
         mids = np.zeros(G, dtype=np.int64)
-        i, L = 0, len(enc)
-        while i < L:
-            mm = rx.search(enc, i)
-            if not mm:
-                break
-            if mm.end() == mm.start():  # empty match: advance
-                i = mm.start() + 1
-                continue
-            sp = mm.start()
-            g = int(np.searchsorted(group_strstart, sp, side="right") - 1)
-            r = sp - g
-            if enum_at is not None:  # NO_SKIP and/or terminal_not: enumerate
-                hi = bound(r, int(ends[g]))
-                cands = enum_at(bools, r, hi, ic)
-                if filler_idx:  # drop filler-anchored candidates
-                    cands = [m for m in cands if m[0][1] not in filler_idx]
-                    # Flink match identity = the variable->events
-                    # assignment: candidates differing only in FILLER
-                    # rows are one match (interchangeable gap splits
-                    # around absent optional stages) -> dedup on the
-                    # user-row projection
-                    seen_u, uniq = set(), []
-                    for mm_ in cands:
-                        ku = tuple(r for r in mm_ if r[1] not in filler_idx)
-                        if ku not in seen_u:
-                            seen_u.add(ku)
-                            uniq.append(mm_)
-                    cands = uniq
-                if fluid_links:
-                    cands = [
-                        m for m in cands
-                        if _fluid_ok(m, bools, fl_idx, fluid_links)
-                    ]
-                if greedy_spans:
-                    cands = [
-                        m for m in cands
-                        if _greedy_ok(m, bools, fl_idx, greedy_spans,
-                                      filler_idx)
-                    ]
-                if terminal_not is not None:
-                    cands = _nf_survivors(cands, bools, hi)
-                if skip_mode == "no_skip":
-                    for m in cands:
-                        for pos, si in m:
-                            rows_idx.append(pos)
-                            match_ids.append(int(mids[g]))
-                            matched_syms.append(symbols[si])
-                        mids[g] += 1
-                    i = sp + 1
-                elif cands:  # single-match: first-completed survivor
-                    m = min(cands, key=lambda mm: (len(mm), [p for p, _ in mm]))
-                    for pos, si in m:
-                        rows_idx.append(pos)
-                        match_ids.append(int(mids[g]))
-                        matched_syms.append(symbols[si])
-                    mids[g] += 1
-                    i = _resume_pos(m, skip_mode, skip_sym, symbols) + g
-                else:
-                    i = sp + 1
-                continue
-            m = match_at(bools, r, bound(r, int(ends[g])), ic)
-            if m and filler_idx and m[0][1] in filler_idx:
-                m = None  # filler-anchored: re-found at its first real row
-            if not m:  # key-bound mismatch (defensive) or WITHIN clamp
-                i = sp + 1
-                continue
+
+        def emit(m, g: int) -> None:
             for pos, si in m:
-                rows_idx.append(pos)
-                match_ids.append(int(mids[g]))
-                matched_syms.append(symbols[si])
+                if si in user_idx:
+                    rows_idx.append(pos)
+                    match_ids.append(int(mids[g]))
+                    matched_syms.append(symbols[si])
             mids[g] += 1
-            i = _resume_pos(m, skip_mode, skip_sym, symbols) + g
+
+        def at(r: int, g: int) -> int:
+            """Emit the match(es) starting at row r of key g; -> the row
+            the scan resumes at."""
+            hi = bound(r, int(ends[g]))
+            if pl.skip_mode == "no_skip":
+                for m in _candidates(pl, bools, r, hi, ic):
+                    emit(m, g)
+                return r + 1
+            m = _first_match(pl, bools, r, hi, ic)
+            if not m:  # key-bound mismatch or WITHIN clamp
+                return r + 1
+            emit(m, g)
+            return _resume_pos(m, pl.skip_mode, pl.skip_sym, symbols)
+
+        if pl.rx is not None:
+            acc = np.zeros(n, dtype=np.int32)
+            for b, col in enumerate(bools[: len(symbols)]):  # tn flag is no rx class
+                acc += np.asarray(col, dtype=np.int32) << b
+            acc += _RX_BASE
+            s_all = "".join(map(chr, acc.tolist()))
+            sep = chr(_RX_BASE)  # bitmask 0: in no symbol class
+            enc = sep.join(s_all[s:e] for s, e in zip(starts.tolist(), ends.tolist()))
+            group_strstart = starts + np.arange(G)
+            i, L = 0, len(enc)
+            while i < L:
+                mm = pl.rx.search(enc, i)
+                if not mm:
+                    break
+                if mm.end() == mm.start():  # empty match: advance
+                    i = mm.start() + 1
+                    continue
+                sp = mm.start()
+                g = int(np.searchsorted(group_strstart, sp, side="right") - 1)
+                i = at(sp - g, g) + g
+        else:  # >12 symbols: per-key first-set cursor
+            can_start = np.logical_or.reduce(
+                [np.asarray(bools[j], dtype=bool) for j in pl.first_idx]
+            )
+            for g in range(G):
+                r, e = int(starts[g]), int(ends[g])
+                while r < e:
+                    r = at(r, g) if can_start[r] else r + 1
         if not rows_idx:
             return None
         out = pdf.iloc[rows_idx][data_cols].copy()
         out["match_id"] = pd.Series(match_ids, index=out.index, dtype="int64")
         out["matched_symbol"] = pd.Series(matched_syms, index=out.index)
+        out["__plan"] = pl.tag
         return out
+
+    def scan_chunk(pdf, starts):
+        import pandas as pd
+
+        ends = np.append(starts[1:], len(pdf))
+        frames = [scan_plan(*c, pdf, starts, ends) for c in compiled]
+        frames = [f for f in frames if f is not None]
+        return pd.concat(frames, ignore_index=True) if frames else None
+
+    part_cols = list(partition_by)
 
     def run_chunks(batches):
         import pandas as pd
@@ -1435,390 +1584,6 @@ def match_recognize(
     # keys are hash-partitioned and made contiguous + ordered within
     # partitions, so no per-key pandas sort is needed; memory is bounded
     # by one Arrow batch + the largest single key's rows (the carry)
-    from reshape_on_flink_spark.session import (
-        PYTHON_STAGE_TASK_BYTES,
-        repartition_for_python_stage,
-    )
-
-    sorted_df = repartition_for_python_stage(
-        flagged, part_cols, task_bytes=PYTHON_STAGE_TASK_BYTES
-    ).sortWithinPartitions(*part_cols, *order_by)
-    return sorted_df.mapInPandas(run_chunks, schema=schema_out)
-
-
-def match_recognize_multi(
-    df: DataFrame,
-    partition_by: str | list[str],
-    order_by: str | list[str],
-    plans: list[dict],
-) -> DataFrame:
-    """N ``no_skip`` enumeration passes in ONE keyed shuffle.
-
-    Motivation (BASELINE.md round-13 pass-count profile): the timeout
-    side output's prefix plans each ran a full ``match_recognize`` pass
-    — repartition + sort + the pandas scan — over the SAME base
-    relation, and the G-plan family was measured scan-DOMINATED
-    (q_cep_timeout_group_opt: 5 passes, ~0.72 estimated scan share).
-    This runs every plan inside one ``repartition(keys) +
-    sortWithinPartitions + mapInPandas`` stage, tagging output rows
-    with ``__plan``, so the base computation, shuffle, sort and Arrow
-    transfer are paid once regardless of plan count. At cluster scale
-    the saving compounds: one wide shuffle of the event relation
-    instead of one per parked-branch shape.
-
-    Each plan dict: ``pattern`` (string), ``define`` (symbol ->
-    Catalyst Column), ``tag`` (the ``__plan`` value), ``user_syms``
-    (symbols kept in the output — ``flat_select``'s filter, applied at
-    emission time), plus optional ``within`` / ``iter_define`` /
-    ``filler_syms`` / ``fluid_links`` / ``greedy_spans`` with
-    :func:`match_recognize` semantics.
-
-    Contract (pinned by ``test_cep_multi_pass_equals_singles``): for
-    every plan, the rows with ``__plan == tag`` equal
-    ``match_recognize(df, keys, order, pattern, define,
-    after_match=<plan's>, ...)`` filtered to ``user_syms`` — the multi
-    pass is a scheduling change only. Plans default to the ``no_skip``
-    enumeration route (timeout prefixes always run ``no_skip`` with
-    trailing NOT stages stripped upstream); a plan may instead carry
-    ``after_match`` (a single-match skip strategy — round 14, late:
-    the skip route's full-pattern pass rides the consolidated
-    shuffle) with ``seq_enum=True`` when its pattern was compiled
-    ``emit='all'`` (fluid links / greedy spans force the
-    enumerate+min first-completed route). ``terminal_not`` is not
-    supported — those patterns keep their dedicated pass.
-    """
-    partition_by = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
-    order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-
-    compiled = []
-    flag_cols: list = []  # (name, Column) — appended in ONE select below
-    for j, p in enumerate(plans):
-        pattern = p["pattern"]
-        define = dict(p["define"])
-        iter_define = dict(p["iter_define"]) if p.get("iter_define") else None
-        if _is_flat(pattern):
-            toks = parse_pattern(pattern)
-            symbols = pattern_symbols(toks)
-            ast = _flat_to_ast(toks)
-        else:
-            ast = parse_pattern_ast(pattern)
-            symbols = ast_symbols(ast)
-        if iter_define:
-            unknown = [s for s in iter_define if s not in symbols]
-            if unknown:
-                raise ValueError(
-                    f"iter_define for symbols not in the pattern: {unknown}"
-                )
-            define = {
-                **{s: F.lit(True) for s in iter_define if s not in define},
-                **define,
-            }
-        missing = [s for s in symbols if s not in define]
-        if missing:
-            raise ValueError(f"pattern symbols without DEFINE: {missing}")
-        only_pandas = [s for s in symbols if define[s] is None]
-        if only_pandas:
-            raise ValueError(
-                f"batch CEP needs Catalyst conditions; stages "
-                f"{only_pandas} have only pandas predicates"
-            )
-        fluid_links = list(p.get("fluid_links") or []) or None
-        greedy_spans = list(p.get("greedy_spans") or []) or None
-        filler_idx = frozenset(
-            symbols.index(s) for s in (p.get("filler_syms") or ()) if s in symbols
-        )
-        user_set = set(p["user_syms"])
-        sym_cols = [f"__p{j}_{s}" for s in symbols]
-        for s, c in zip(symbols, sym_cols):
-            flag_cols.append((c, F.coalesce(define[s], F.lit(False))))
-        after_match = p.get("after_match", "no_skip")
-        skip = _parse_after_match(after_match, symbols)
-        compiled.append(
-            dict(
-                tag=str(p["tag"]),
-                symbols=symbols,
-                sym_cols=sym_cols,
-                # per-plan rename so _IterCtx row dicts expose the
-                # __sym_{name} static flags the compiler's iterative
-                # filler lambdas read (e.get(f"__sym_{name}", True))
-                ren={c: f"__sym_{s}" for s, c in zip(symbols, sym_cols)},
-                enum_at=_ast_enumerator(symbols, ast),
-                # single-match plans (round 14, late — the skip route's
-                # full-pattern pass rides the consolidated shuffle):
-                # the sequential cursor resumes by the skip strategy;
-                # the backtracking matcher serves plans whose compile
-                # is emit='first' (seq_enum False), enumerate+min the
-                # fluid/greedy ones (first-completed survivor)
-                skip=skip,
-                match_at=(
-                    _ast_matcher(symbols, ast)
-                    if skip[0] != "no_skip" else None
-                ),
-                seq_enum=bool(p.get("seq_enum")),
-                rx=_bitmask_regex(symbols, ast),
-                first_idx=_first_idx_ast(symbols, ast),
-                fl_idx=(
-                    _fluid_index(symbols) if (fluid_links or greedy_spans) else None
-                ),
-                filler_idx=filler_idx,
-                fluid_links=fluid_links,
-                greedy_spans=greedy_spans,
-                iter_define=iter_define,
-                within=p.get("within"),
-                user_idx=frozenset(
-                    i for i, s in enumerate(symbols) if s in user_set
-                ),
-            )
-        )
-
-    # ONE select instead of one withColumn per symbol per plan: each
-    # withColumn rebuilds (and re-analyzes) the whole logical plan, so a
-    # 5-plan x 6-symbol timeout family paid ~30 plan rebuilds of driver
-    # wall per query build (guide §7.3 — measured: q_cep_timeout_group_*
-    # spent 1.4-3.8 s, ~half the query, in DataFrame construction).
-    flagged = df.select(
-        "*", *[col.alias(c) for c, col in flag_cols]
-    ) if flag_cols else df
-
-    out_fields = list(df.schema.fields)
-    data_cols = [f.name for f in out_fields]
-    schema_out = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-        + ", match_id bigint, matched_symbol string, __plan string"
-    )
-
-    def scan_chunk(pdf, starts):
-        import pandas as pd
-
-        n = len(pdf)
-        G = len(starts)
-        ends = np.append(starts[1:], n)
-        frames = []
-        for pl in compiled:
-            bools = [pdf[c].to_numpy() for c in pl["sym_cols"]]
-            if pl["iter_define"]:
-                ic = _build_ic(
-                    pdf.rename(columns=pl["ren"]),
-                    pl["symbols"],
-                    len(pl["symbols"]),
-                    pl["iter_define"],
-                    order_by[0],
-                )
-            else:
-                ic = None
-            if pl["within"] is not None:
-                tv, is_time = _time_axis(pdf, order_by[0])
-                delta = _within_delta(pl["within"], is_time)
-
-                def bound(i: int, hi: int, tv=tv, delta=delta) -> int:
-                    return min(
-                        hi,
-                        i
-                        + int(
-                            np.searchsorted(
-                                tv[i:hi], tv[i] + delta, side="left"
-                            )
-                        ),
-                    )
-            else:
-                bound = lambda i, hi: hi  # noqa: E731
-            rows_idx: list = []
-            match_ids: list = []
-            matched_syms: list = []
-            mids = np.zeros(G, dtype=np.int64)
-            symbols = pl["symbols"]
-            enum_at = pl["enum_at"]
-            filler_idx = pl["filler_idx"]
-            user_idx = pl["user_idx"]
-
-            def handle(r: int, g: int) -> None:
-                hi = bound(r, int(ends[g]))
-                cands = enum_at(bools, r, hi, ic)
-                if filler_idx:  # drop filler-anchored candidates + dedup
-                    cands = [m for m in cands if m[0][1] not in filler_idx]
-                    seen_u, uniq = set(), []
-                    for mm_ in cands:
-                        ku = tuple(rr for rr in mm_ if rr[1] not in filler_idx)
-                        if ku not in seen_u:
-                            seen_u.add(ku)
-                            uniq.append(mm_)
-                    cands = uniq
-                if pl["fluid_links"]:
-                    cands = [
-                        m
-                        for m in cands
-                        if _fluid_ok(m, bools, pl["fl_idx"], pl["fluid_links"])
-                    ]
-                if pl["greedy_spans"]:
-                    cands = [
-                        m
-                        for m in cands
-                        if _greedy_ok(
-                            m, bools, pl["fl_idx"], pl["greedy_spans"],
-                            filler_idx,
-                        )
-                    ]
-                for m in cands:
-                    for pos, si in m:
-                        if si in user_idx:
-                            rows_idx.append(pos)
-                            match_ids.append(int(mids[g]))
-                            matched_syms.append(symbols[si])
-                    mids[g] += 1
-
-            skip_mode, skip_sym = pl["skip"]
-
-            def seq_match(r: int, g: int):
-                """Single-match candidate at start r — the sequential
-                route's first-completed survivor (enumerate+min for
-                fluid/greedy emit='all' compiles, the backtracking
-                matcher otherwise), pinned equal to match_recognize by
-                test_cep_multi_sequential_equals_single."""
-                hi = bound(r, int(ends[g]))
-                if pl["seq_enum"]:
-                    cands = enum_at(bools, r, hi, ic)
-                    if filler_idx:
-                        cands = [
-                            m for m in cands if m[0][1] not in filler_idx
-                        ]
-                    if pl["fluid_links"]:
-                        cands = [
-                            m for m in cands
-                            if _fluid_ok(m, bools, pl["fl_idx"],
-                                         pl["fluid_links"])
-                        ]
-                    if pl["greedy_spans"]:
-                        cands = [
-                            m for m in cands
-                            if _greedy_ok(m, bools, pl["fl_idx"],
-                                          pl["greedy_spans"], filler_idx)
-                        ]
-                    if not cands:
-                        return None
-                    return min(
-                        cands,
-                        key=lambda mm: (len(mm), [p2 for p2, _ in mm]),
-                    )
-                m = pl["match_at"](bools, r, hi, ic)
-                if m and filler_idx and m[0][1] in filler_idx:
-                    return None  # filler-anchored: re-found later
-                return m
-
-            def emit_m(m, g: int) -> None:
-                for pos, si in m:
-                    if si in user_idx:
-                        rows_idx.append(pos)
-                        match_ids.append(int(mids[g]))
-                        matched_syms.append(symbols[si])
-                mids[g] += 1
-
-            rx = pl["rx"]
-            if rx is not None and n:
-                acc = np.zeros(n, dtype=np.int32)
-                for b, col in enumerate(bools):
-                    acc += np.asarray(col, dtype=np.int32) << b
-                acc += _RX_BASE
-                s_all = "".join(map(chr, acc.tolist()))
-                sep = chr(_RX_BASE)  # bitmask 0: in no symbol class
-                enc = sep.join(
-                    s_all[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-                )
-                group_strstart = starts + np.arange(G)
-                i, L = 0, len(enc)
-                while i < L:
-                    mm = rx.search(enc, i)
-                    if not mm:
-                        break
-                    if mm.end() == mm.start():  # empty match: advance
-                        i = mm.start() + 1
-                        continue
-                    sp = mm.start()
-                    g = int(
-                        np.searchsorted(group_strstart, sp, side="right") - 1
-                    )
-                    if skip_mode == "no_skip":
-                        handle(sp - g, g)
-                        i = sp + 1
-                        continue
-                    m = seq_match(sp - g, g)
-                    if not m:
-                        i = sp + 1
-                        continue
-                    emit_m(m, g)
-                    i = _resume_pos(m, skip_mode, skip_sym, symbols) + g
-            elif n:
-                can_start = np.logical_or.reduce(
-                    [np.asarray(bools[jj], dtype=bool) for jj in pl["first_idx"]]
-                )
-                if skip_mode == "no_skip":
-                    for g in range(G):
-                        for r in range(int(starts[g]), int(ends[g])):
-                            if can_start[r]:
-                                handle(r, g)
-                else:
-                    for g in range(G):
-                        r = int(starts[g])
-                        while r < int(ends[g]):
-                            if not can_start[r]:
-                                r += 1
-                                continue
-                            m = seq_match(r, g)
-                            if not m:
-                                r += 1
-                                continue
-                            emit_m(m, g)
-                            r = _resume_pos(m, skip_mode, skip_sym, symbols)
-            if rows_idx:
-                out = pdf.iloc[rows_idx][data_cols].copy()
-                out["match_id"] = pd.Series(
-                    match_ids, index=out.index, dtype="int64"
-                )
-                out["matched_symbol"] = pd.Series(
-                    matched_syms, index=out.index
-                )
-                out["__plan"] = pl["tag"]
-                frames.append(out)
-        if not frames:
-            return None
-        return pd.concat(frames, ignore_index=True)
-
-    part_cols = list(partition_by)
-
-    def run_chunks(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            else:
-                pdf = pdf.reset_index(drop=True)
-            keys = pdf[part_cols]
-            shifted = keys.shift()
-            boundary = (
-                ((keys != shifted) & ~(keys.isna() & shifted.isna()))
-                .any(axis=1)
-                .to_numpy()
-            )
-            boundary[0] = True
-            starts = np.flatnonzero(boundary)
-            last_start = int(starts[-1])
-            carry = pdf.iloc[last_start:]
-            if last_start == 0:
-                continue
-            out = scan_chunk(pdf.iloc[:last_start], starts[:-1])
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = scan_chunk(carry.reset_index(drop=True), np.array([0]))
-            if out is not None:
-                yield out
-
     from reshape_on_flink_spark.session import (
         PYTHON_STAGE_TASK_BYTES,
         repartition_for_python_stage,

@@ -52,6 +52,12 @@ def _pattern(kind: str, cols):
             .followed_by("B").where(cols("b"))
             .followed_by("C").where(cols("c")).within(12)
         )
+    if kind == "two_stage":
+        # one parked prefix: a single timeout plan
+        return (
+            Pattern.begin("A").where(cols("a"))
+            .followed_by("B").where(cols("b")).within(12)
+        )
     if kind == "loop_until":
         return (
             Pattern.begin("A").where(cols("a"))
@@ -233,6 +239,9 @@ GRID = [
     ("plain", "no_skip", 11),
     ("plain", "past_last_row", 12),
     ("plain", "to_first B", 13),
+    # two-stage patterns: one timeout plan in the consolidated pass
+    ("two_stage", "no_skip", 14),
+    ("two_stage", "to_next_row", 15),
     ("loop_until", "no_skip", 21),
     ("loop_until", "past_last_row", 22),
     ("greedy_interior", "no_skip", 31),
@@ -352,10 +361,22 @@ def test_timeout_skip_subset_of_no_skip_random(spark):
             assert pruned <= base, (kind, seed)
 
 
+def _iter_b():
+    """Iterative B condition: at most two B takes per branch. It reads
+    the static __sym_B flag, which the multi scan exposes by renaming
+    its per-plan flag columns. Built per call, so the workers receive it
+    by value."""
+
+    def cond(event, ctx):
+        return bool(event["__sym_B"]) and len(ctx.get_events_for_pattern("B")) < 2
+
+    return cond
+
+
 def test_cep_multi_pass_equals_singles(spark):
     """match_recognize_multi contract (round 14, one-pass plan-id
     consolidation): for every plan, the rows tagged __plan == tag equal
-    a standalone match_recognize no_skip pass filtered to user_syms —
+    the grouped reference harness's no_skip pass filtered to user_syms —
     the multi pass is a scheduling change only (one shuffle + one
     pandas stage instead of one per plan)."""
     from reshape_on_flink_spark.operators.cep import (
@@ -380,6 +401,15 @@ def test_cep_multi_pass_equals_singles(spark):
              filler_syms=["G", "L"], within=12),
         dict(pattern="A B{1,2}", tag="3", user_syms=["A", "B"],
              define={"A": _c("a"), "B": _c("b")}, within=12),
+        # terminal notFollowedBy: a flag column outside the pattern
+        dict(pattern="A G*? B", tag="4", user_syms=["A", "B"],
+             define={"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
+                     "N": _c("n")},
+             filler_syms=["G"], within=12, terminal_not="N"),
+        # iterative condition on a loop
+        dict(pattern="A G*? B+", tag="5", user_syms=["A", "B"],
+             define={"A": _c("a"), "G": ~_c("b"), "B": _c("b")},
+             filler_syms=["G"], within=12, iter_define={"B": _iter_b()}),
     ]
     multi = match_recognize_multi(df, ["k"], ["ts"], plans).collect()
     by_tag: dict = {}
@@ -393,6 +423,8 @@ def test_cep_multi_pass_equals_singles(spark):
                 df, ["k"], ["ts"], p["pattern"], p["define"],
                 after_match="no_skip", within=p.get("within"),
                 filler_syms=p.get("filler_syms"),
+                terminal_not=p.get("terminal_not"),
+                iter_define=p.get("iter_define"), impl="grouped",
             )
             .where(F.col("matched_symbol").isin(p["user_syms"]))
             .collect()
@@ -407,10 +439,10 @@ def test_cep_multi_pass_equals_singles(spark):
 def test_cep_multi_sequential_equals_single(spark):
     """Sequential plans in match_recognize_multi (round 14, late — the
     skip route's full-pattern pass rides the consolidated shuffle):
-    for every skip strategy, a plan carrying after_match equals a
-    standalone match_recognize with that strategy, filtered to
-    user_syms — including the >12-symbol per-key cursor fallback shape
-    via a second, filler-heavy pattern."""
+    for every skip strategy, a plan carrying after_match equals the
+    grouped reference harness with that strategy, filtered to user_syms
+    — over relaxed gaps, a loop filler, a terminal notFollowedBy, an
+    iterative condition and a pattern too wide for the bitmask regex."""
     from reshape_on_flink_spark.operators.cep import (
         match_recognize,
         match_recognize_multi,
@@ -420,19 +452,29 @@ def test_cep_multi_sequential_equals_single(spark):
     df = spark.createDataFrame(rows, "k int, ts int, name string")
     shapes = [
         ("A G*? B H*? C", {"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
-                           "H": ~_c("c"), "C": _c("c")}, ["G", "H"]),
+                           "H": ~_c("c"), "C": _c("c")}, ["G", "H"], {}),
         ("A B (L*? B)*? G*? C",
          {"A": _c("a"), "B": _c("b"), "L": ~_c("b"), "G": ~_c("c"),
-          "C": _c("c")}, ["L", "G"]),
+          "C": _c("c")}, ["L", "G"], {}),
+        ("A G* B+", {"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
+                     "N": _c("n")}, ["G"], {"terminal_not": "N"}),
+        ("A G*? B+ H*? C", {"A": _c("a"), "G": ~_c("b"), "B": _c("b"),
+                            "H": ~_c("c"), "C": _c("c")}, ["G", "H"],
+         {"iter_define": {"B": _iter_b()}}),
+        # 13 symbols: past the bitmask regex, the per-key first-set scan
+        (" ".join(["A", *[f"X{i}?" for i in range(10)], "G*?", "B"]),
+         {"A": _c("a"), **{f"X{i}": _c("x") for i in range(10)},
+          "G": ~_c("b"), "B": _c("b")}, ["G"], {}),
     ]
     for after in ("past_last_row", "to_next_row", "to_first B",
                   "to_last B"):
         plans = []
-        for i, (pat, define, fillers) in enumerate(shapes):
+        for i, (pat, define, fillers, extra) in enumerate(shapes):
             plans.append(dict(
                 pattern=pat, define=define, tag=f"s{i}",
-                user_syms=[s for s in define if not s.startswith(("G", "H", "L"))],
+                user_syms=[s for s in define if s in ("A", "B", "C")],
                 filler_syms=fillers, within=12, after_match=after,
+                **extra,
             ))
         multi = match_recognize_multi(df, ["k"], ["ts"], plans).collect()
         by_tag: dict = {}
@@ -446,6 +488,8 @@ def test_cep_multi_sequential_equals_single(spark):
                     df, ["k"], ["ts"], p["pattern"], p["define"],
                     after_match=after, within=p.get("within"),
                     filler_syms=p.get("filler_syms"),
+                    terminal_not=p.get("terminal_not"),
+                    iter_define=p.get("iter_define"), impl="grouped",
                 )
                 .where(F.col("matched_symbol").isin(p["user_syms"]))
                 .collect()
