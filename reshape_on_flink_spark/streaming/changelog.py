@@ -1,4 +1,4 @@
-"""Retract streams — Flink's RowKind-emitting streaming aggregation.
+"""Changelog operators — Flink's keyed changelog runtime on Spark.
 
 Reference surface:
 
@@ -15,13 +15,24 @@ Reference surface:
   and accumulate(+I/+U), emitting -D when a group's count drains to
   zero. This is what makes TWO-LEVEL aggregations correct in Flink
   (the inner agg's updates arrive as retract pairs at the outer agg).
+- The other keyed changelog operators of the reference's runtime:
+  ``StreamingJoinOperator``, the table ``WindowOperator``,
+  ``RetractableTopNFunction``, ``UpdatableTopNFunction`` and
+  ``DeduplicateFunctionHelper`` (see each operator below).
 
-Spark-first shape: both operators are ``applyInPandasWithState`` over
-one key shuffle — batch rows pre-aggregate in pandas (vectorized,
-per-key-per-batch partials), the keyed state holds one accumulator row
-per key, and emission is the delta pairs. State size = O(keys), not
-O(rows). At 100 TB the shuffle is the same one any grouped aggregation
-pays; the operator adds only the per-key accumulator map.
+Spark-first shape: the six operators (:func:`to_retract_stream`,
+:func:`join_changelog`, :func:`window_agg_changelog`,
+:func:`retractable_topn`, :func:`updatable_topn`,
+:func:`dedup_keep_last_changelog`) are each one per-key step on ONE
+keyed replay harness, :func:`_keyed_replay`: a streaming input runs
+``applyInPandasWithState`` over one key shuffle with the key's state
+pickled between micro-batches; a batch input runs the same step once
+per key through ``applyInPandas`` on fresh state — the replay-equality
+oracle. Steps read their rows through one record decoder
+(:func:`_decode`: replay-order sort, RowKind check, normalized cells);
+the two aggregates share one accumulator (:class:`_Aggs`). State is
+per key (accumulators, open windows, Top-N maps, the stored row), and
+at 100 TB the shuffle is the same one any grouped aggregation pays.
 
 Changelog column/constants are shared with ``operators.changelog``
 (``_change_type`` with +I/-U/+U/-D), so the batch CDC operators
@@ -31,7 +42,9 @@ directly.
 
 from __future__ import annotations
 
+import functools
 import pickle
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -54,6 +67,11 @@ from reshape_on_flink_spark.operators.changelog import (
 
 #: supported aggregate functions: out_col -> (fn, in_col)
 _FNS = ("count", "sum", "avg", "min", "max")
+_KINDS_OK = frozenset((INSERT, UPDATE_AFTER, UPDATE_BEFORE, DELETE))
+#: accumulate (+I/+U) or retract (-U/-D)
+_SIGN = {INSERT: 1, UPDATE_AFTER: 1, UPDATE_BEFORE: -1, DELETE: -1}
+#: Spark simpleString types whose pandas column turns float64 on a NULL
+_INTEGRAL = ("int", "bigint", "smallint", "tinyint", "long")
 
 
 def _out_field(fn: str, in_field) -> "StructField":
@@ -67,8 +85,8 @@ def _out_field(fn: str, in_field) -> "StructField":
 def _order_spec(order_by) -> tuple[list[str] | None, set[str]]:
     """Normalize an ``order_by`` spec to ``(sort_cols, payload_skip)``.
 
-    ``order_by`` may be a single column name (back-compat: the column is
-    a pure replay-sequence helper and is EXCLUDED from the operator's
+    ``order_by`` may be a single column name (the column is a pure
+    replay-sequence helper and is EXCLUDED from the operator's
     payload/output) or a LIST of column names (a composite replay order
     over columns the input already carries — payload membership is left
     untouched, so ordering by a payload column does not drop it from the
@@ -84,6 +102,303 @@ def _order_spec(order_by) -> tuple[list[str] | None, set[str]]:
     if isinstance(order_by, str):
         return [order_by], {order_by}
     return list(order_by), set()
+
+
+def _is_null(v):
+    # None, or a float NaN (v != v only for NaN)
+    return v is None or v != v
+
+
+class _Spec(NamedTuple):
+    """How one changelog input replays (built by :func:`_input_spec`)."""
+
+    sort_cols: list[str] | None  # replay order inside a key's batch
+    payload: list[str]  # the record cells, in order
+    pay_int: list[bool]  # payload column is integral (see _norm_cell)
+    prefix: list[StructField]  # out schema head: _change_type, keys, payload
+
+
+def _input_spec(
+    sdf: DataFrame,
+    keys: list[str],
+    order_by,
+    *,
+    payload: list[str] | None = None,
+    seq_fallback: bool = True,
+    drop_order: bool = False,
+) -> _Spec:
+    """The shared input contract of the changelog operators: ``order_by``
+    (:func:`_order_spec`, unknown columns are loud), the payload (every
+    column but the keys, ``_change_type`` and a single-name order
+    column; ``drop_order`` drops list-form order columns too) unless
+    given, and its integral flags. Without ``order_by`` a key's batch
+    replays in ``_change_seq`` order when the input carries one and
+    ``seq_fallback`` is set, else in arrival order."""
+    fields = {f.name: f for f in sdf.schema.fields}
+    order_cols, order_skip = _order_spec(order_by)
+    for c in order_cols or ():
+        if c not in fields:
+            raise ValueError(f"unknown order_by column {c!r}")
+    if drop_order:
+        order_skip = set(order_cols or ())
+    if payload is None:
+        skip = set(keys) | {CHANGE_COL} | order_skip
+        payload = [c for c in sdf.columns if c not in skip]
+    if order_cols is None and seq_fallback and "_change_seq" in fields:
+        order_cols = ["_change_seq"]
+    types = dict(sdf.dtypes)
+    return _Spec(
+        order_cols,
+        payload,
+        [types[c] in _INTEGRAL for c in payload],
+        [StructField(CHANGE_COL, StringType())]
+        + [fields[k] for k in keys]
+        + [StructField(c, fields[c].dataType, True) for c in payload],
+    )
+
+
+def _norm_cell(v, integral: bool):
+    """Deterministic record-cell normalization across micro-batches:
+    pandas renders a batch's column as int64 or float64 depending on
+    whether THAT batch carries nulls (the other side's rows pad with
+    NaN), so 5 and 5.0 must hash equal in the state view."""
+    import pandas as pd
+
+    if v is None or (isinstance(v, float) and v != v) or v is pd.NaT:
+        return None
+    try:
+        if hasattr(v, "item"):
+            v = v.item()
+    except (ValueError, AttributeError):
+        pass
+    if integral and isinstance(v, float):
+        return int(v)
+    return v
+
+
+def _decode(batch, *specs: _Spec, kinds: bool = True) -> list[tuple]:
+    """One key's micro-batch -> its records ``(side, kind, cells)`` in
+    replay order: sorted by the spec's ``sort_cols`` (stable, so ties
+    keep arrival order), every ``_change_type`` checked to be
+    +I/-U/+U/-D (``kinds=False``: an append-only input, every row is
+    +I), and each payload cell normalized by :func:`_norm_cell` into
+    the ``cells`` tuple. With two specs (the join's left and right) the
+    batch's ``__side`` column picks each row's spec and payload; with
+    one, ``side`` is 0."""
+    if specs[0].sort_cols is not None:
+        batch = batch.sort_values(specs[0].sort_cols, kind="mergesort")
+    n = len(batch)
+    if kinds:
+        ks = batch[CHANGE_COL].tolist()
+        if not _KINDS_OK.issuperset(ks):
+            bad = next(k for k in ks if k not in _KINDS_OK)
+            raise ValueError(f"unknown {CHANGE_COL} value {bad!r}")
+    else:
+        ks = [INSERT] * n
+    sides = batch["__side"].tolist() if len(specs) > 1 else [0] * n
+    views = [([batch[c].tolist() for c in s.payload], s.pay_int) for s in specs]
+    recs = []
+    for i, (sd, kd) in enumerate(zip(sides, ks)):
+        vals, ints = views[sd]
+        recs.append((sd, kd, tuple(_norm_cell(col[i], f) for col, f in zip(vals, ints))))
+    return recs
+
+
+def _sequenced(rows: list, seq: int, emit: bool = True) -> tuple[list, int]:
+    """Stamp a key's per-key ``_change_seq`` (monotone across batches)
+    onto its emitted rows; returns ``(rows, next seq)``."""
+    if emit:
+        rows = [[*r, seq + i] for i, r in enumerate(rows)]
+    return rows, seq + len(rows)
+
+
+def _keyed_replay(
+    sdf: DataFrame,
+    keys: list[str],
+    out_schema: StructType,
+    fresh,
+    step,
+    aux0=0,
+    batch_aux=0,
+) -> DataFrame:
+    """The keyed changelog runtime every operator of this module runs on.
+
+    ``step(key_vals, batch, st, aux) -> (rows, aux)`` replays one key's
+    pandas ``batch`` against its state ``st`` (a fresh one from
+    ``fresh()``, mutated in place) and returns the emitted rows (lists
+    in ``out_schema`` order) and the new ``aux`` — the next
+    ``_change_seq`` for the seq-emitting operators, the watermark for
+    the window aggregate.
+
+    Streaming input: ``applyInPandasWithState`` over one key shuffle;
+    the state between micro-batches is ``(pickled st, aux)``, ``aux0``
+    for a key's first batch. Output mode is append: changelog rows are
+    immutable events. Batch input: one ``applyInPandas`` pass that runs
+    the step once per key on fresh state with all of the key's rows as
+    one mega-batch and ``aux = batch_aux`` — the replay-equality oracle
+    of the streaming route.
+    """
+    import pandas as pd
+
+    cols = [f.name for f in out_schema.fields]
+    if sdf.isStreaming:
+        # a _change_seq is a long, a watermark a double
+        aux_type = DoubleType() if isinstance(aux0, float) else LongType()
+        state_schema = StructType(
+            [StructField("blob", BinaryType()), StructField("aux", aux_type)]
+        )
+
+        def run(key, pdfs, state):
+            batch = pd.concat(list(pdfs), ignore_index=True)
+            if not len(batch):
+                return
+            if state.exists:
+                blob, aux = state.get
+                st = pickle.loads(blob)
+            else:
+                st, aux = fresh(), aux0
+            rows, aux = step(list(key), batch, st, aux)
+            state.update((pickle.dumps(st), aux))
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
+
+        return sdf.groupBy(*keys).applyInPandasWithState(
+            run, out_schema, state_schema, "append", "NoTimeout"
+        )
+
+    def run_batch(key, batch):
+        rows, _aux = step(list(key), batch, fresh(), batch_aux)
+        return pd.DataFrame(rows, columns=cols)
+
+    return repartition_for_python_stage(sdf, keys).groupBy(*keys).applyInPandas(
+        run_batch, out_schema
+    )
+
+
+class _Aggs:
+    """The SQL aggregates of :func:`to_retract_stream` and
+    :func:`window_agg_changelog` over one group's accumulator dict:
+    ``n`` (the signed row count), ``s_<out>``/``c_<out>`` (sum and
+    non-NULL count of a SUM/AVG input) and ``m_<out>`` (the current
+    MIN/MAX, or under retraction its value multiset — Flink's
+    MinWithRetractAggFunction keeps the same map). NULL inputs are
+    skipped (Sum/Avg/Min/MaxWithRetractAggFunction); cells passed to
+    :meth:`apply` are aligned with :attr:`cols`, the distinct input
+    columns."""
+
+    def __init__(self, aggs: dict, fields: dict, retracting: bool):
+        for out, (fn, col) in aggs.items():
+            if fn not in _FNS:
+                raise ValueError(f"unsupported aggregate {fn!r} (use {_FNS})")
+            if fn != "count" and (col is None or col not in fields):
+                raise ValueError(f"aggregate {out!r}: unknown input column {col!r}")
+        self.cols = list(dict.fromkeys(c for fn, c in aggs.values() if fn != "count"))
+        self.items = [
+            (out, fn, None if fn == "count" else self.cols.index(col))
+            for out, (fn, col) in aggs.items()
+        ]
+        self.fields = [
+            StructField(out, _out_field(fn, fields.get(col or "", None)))
+            for out, (fn, col) in aggs.items()
+        ]
+        self.multiset = retracting and any(
+            fn in ("min", "max") for _o, fn, _i in self.items
+        )
+
+    def init(self) -> dict:
+        acc = {"n": 0}
+        for out, fn, _i in self.items:
+            if fn in ("sum", "avg"):
+                acc[f"s_{out}"] = 0.0
+                acc[f"c_{out}"] = 0  # non-null input count (NULLs skipped)
+            elif fn in ("min", "max"):
+                acc[f"m_{out}"] = [] if self.multiset else None
+        return acc
+
+    def minmax(self, acc, out, fn, v, sg):
+        if _is_null(v):
+            return  # Flink Min/MaxWithRetractAggFunction skips NULLs
+        if self.multiset:
+            ms = acc[f"m_{out}"]
+            if sg > 0:
+                ms.append(v)
+            else:
+                ms.remove(v)  # retraction of a never-added value raises
+        else:
+            cur = acc[f"m_{out}"]
+            acc[f"m_{out}"] = (
+                v if cur is None else (min(cur, v) if fn == "min" else max(cur, v))
+            )
+
+    def apply(self, acc, cells, sg):
+        """Accumulate (``sg`` 1) or retract (-1) one row."""
+        acc["n"] += sg
+        for out, fn, i in self.items:
+            if fn in ("sum", "avg"):
+                v = cells[i]
+                if not _is_null(v):
+                    acc[f"s_{out}"] += sg * float(v)
+                    acc[f"c_{out}"] += sg
+            elif fn in ("min", "max"):
+                self.minmax(acc, out, fn, cells[i], sg)
+
+    def merge(self, a, b):
+        a["n"] += b["n"]
+        for out, fn, _i in self.items:
+            if fn in ("sum", "avg"):
+                a[f"s_{out}"] += b[f"s_{out}"]
+                a[f"c_{out}"] += b[f"c_{out}"]
+            elif fn in ("min", "max"):
+                if self.multiset:
+                    a[f"m_{out}"].extend(b[f"m_{out}"])
+                else:
+                    self.minmax(a, out, fn, b[f"m_{out}"], 1)
+        return a
+
+    def values(self, acc) -> list:
+        """The aggregate values; a drained group counts 0 and its
+        SUM/AVG/MIN/MAX are NULL."""
+        row = []
+        for out, fn, _i in self.items:
+            if fn == "count":
+                row.append(int(acc["n"]) if acc["n"] > 0 else 0)
+            elif fn == "sum":
+                # SQL/Flink SumWithRetractAggFunction: SUM over zero
+                # non-null inputs is NULL, not 0
+                row.append(
+                    float(acc[f"s_{out}"]) if acc[f"c_{out}"] > 0 else None
+                )
+            elif fn == "avg":
+                # AvgAggFunction divides by the NON-NULL count
+                row.append(
+                    float(acc[f"s_{out}"]) / acc[f"c_{out}"]
+                    if acc[f"c_{out}"] > 0
+                    else None
+                )
+            elif self.multiset:
+                ms = acc[f"m_{out}"]
+                row.append(None if not ms else (min(ms) if fn == "min" else max(ms)))
+            else:
+                row.append(acc[f"m_{out}"])
+        return row
+
+
+def _cmp(descs, a, b):
+    """Top-N sort-key order (``functools.cmp_to_key``): per sort column,
+    ascending unless its ``descs`` flag is set, NULLs last in ascending
+    order."""
+    for desc, va, vb in zip(descs, a, b):
+        if va == vb:
+            continue
+        if va is None:
+            return 1  # NULLs last in ascending order
+        if vb is None:
+            return -1
+        lt = va < vb
+        if desc:
+            lt = not lt
+        return -1 if lt else 1
+    return 0
 
 
 def to_retract_stream(
@@ -134,14 +449,15 @@ def to_retract_stream(
       a batch process in ``order_by`` order when given (pass the
       stream's event/sequence column for deterministic replays),
       else arrival order.
+
+    A batch input replays each key's rows as one micro-batch (the
+    replay-equality oracle of the streaming route).
     """
+    import pandas as pd
+
     keys = [keys] if isinstance(keys, str) else list(keys)
     fields = {f.name: f for f in sdf.schema.fields}
-    for out, (fn, col) in aggs.items():
-        if fn not in _FNS:
-            raise ValueError(f"unsupported aggregate {fn!r} (use {_FNS})")
-        if fn != "count" and (col is None or col not in fields):
-            raise ValueError(f"aggregate {out!r}: unknown input column {col!r}")
+    accs = _Aggs(aggs, fields, consume_changelog)
     if consume_changelog and CHANGE_COL not in fields:
         raise ValueError(
             f"consume_changelog=True needs a {CHANGE_COL!r} column "
@@ -149,69 +465,21 @@ def to_retract_stream(
         )
     if granularity not in ("batch", "row"):
         raise ValueError(f"granularity must be 'batch' or 'row', got {granularity!r}")
-    order_cols, _ = _order_spec(order_by)
-    for c in order_cols or ():
-        if c not in fields:
-            raise ValueError(f"unknown order_by column {c!r}")
+    # a key's changelog must retract in emission order (the multiset
+    # remove of a value not yet added is loud)
+    spec = _input_spec(
+        sdf, keys, order_by, payload=accs.cols, seq_fallback=consume_changelog
+    )
 
-    out_fields = [fields[k] for k in keys]
     out_schema = StructType(
-        [StructField(CHANGE_COL, StringType()), *out_fields]
-        + [StructField(out, _out_field(fn, fields.get(col or "", None)))
-           for out, (fn, col) in aggs.items()]
+        [StructField(CHANGE_COL, StringType()), *(fields[k] for k in keys)]
+        + accs.fields
         + ([StructField("_change_seq", LongType())] if emit_seq else [])
-    )
-    state_schema = StructType(
-        [StructField("acc", BinaryType()), StructField("seq", LongType())]
-    )
-    agg_items = list(aggs.items())
-    need_multiset = consume_changelog and any(
-        fn in ("min", "max") for _o, (fn, _c) in agg_items
     )
 
     def _finalize(acc):
         """accumulator dict -> output values (None group = drained)."""
-        if acc["n"] <= 0:
-            return None
-        row = []
-        for out, (fn, col) in agg_items:
-            if fn == "count":
-                row.append(int(acc["n"]))
-            elif fn == "sum":
-                # SQL/Flink SumWithRetractAggFunction: SUM over zero
-                # non-null inputs is NULL, not 0
-                row.append(
-                    float(acc[f"s_{out}"]) if acc[f"c_{out}"] > 0 else None
-                )
-            elif fn == "avg":
-                # AvgAggFunction divides by the NON-NULL count
-                row.append(
-                    float(acc[f"s_{out}"]) / acc[f"c_{out}"]
-                    if acc[f"c_{out}"] > 0
-                    else None
-                )
-            else:  # min/max
-                if need_multiset:
-                    ms = acc[f"m_{out}"]
-                    if not ms:
-                        row.append(None)
-                    else:
-                        row.append(min(ms) if fn == "min" else max(ms))
-                else:
-                    row.append(acc[f"m_{out}"])
-        return row
-
-    _SIGN = {INSERT: 1, UPDATE_AFTER: 1, UPDATE_BEFORE: -1, DELETE: -1}
-
-    def _init_acc():
-        acc = {"n": 0}
-        for out, (fn, col) in agg_items:
-            if fn == "sum" or fn == "avg":
-                acc[f"s_{out}"] = 0.0
-                acc[f"c_{out}"] = 0  # non-null input count (NULLs skipped)
-            elif fn in ("min", "max"):
-                acc[f"m_{out}"] = [] if need_multiset else None
-        return acc
+        return accs.values(acc) if acc["n"] > 0 else None
 
     def _transition(old, new, key_vals):
         """GroupAggFunction emission contract for one old->new step
@@ -224,84 +492,32 @@ def to_retract_stream(
             return [[DELETE, *key_vals, *old]]
         return []
 
-    def _is_null(v):
-        # None, or a float NaN (v != v only for NaN)
-        return v is None or v != v
-
-    def _upd_minmax_scalar(acc, out, fn, v, sg):
-        if _is_null(v):
-            return  # Flink Min/MaxWithRetractAggFunction skips NULLs
-        if need_multiset:
-            ms = acc[f"m_{out}"]
-            if sg > 0:
-                ms.append(v)
-            else:
-                ms.remove(v)  # retraction of a never-added value raises
-        else:
-            cur = acc[f"m_{out}"]
-            acc[f"m_{out}"] = (
-                v if cur is None else (min(cur, v) if fn == "min" else max(cur, v))
-            )
-
-    def run(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            blob, seq = state.get
-            acc = pickle.loads(blob)
-        else:
-            acc, seq = None, 0
-
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            return
-        sort_col = order_cols if order_cols is not None else (
-            "_change_seq"
-            if consume_changelog and "_change_seq" in batch.columns
-            else None
-        )
-        if sort_col is not None:
-            # a key's changelog must retract in emission order (the
-            # multiset remove of a value not yet added is loud)
-            batch = batch.sort_values(sort_col, kind="mergesort")
-
-        if acc is None:
-            acc = _init_acc()
-        key_vals = list(key)
+    def step(key_vals, batch, acc, seq):
         rows = []
-
-        if consume_changelog:
-            sign = batch[CHANGE_COL].map(_SIGN)
-            if sign.isna().any():
-                bad = batch[CHANGE_COL][sign.isna()].iloc[0]
-                raise ValueError(f"unknown {CHANGE_COL} value {bad!r}")
-        else:
-            sign = None
-
         if granularity == "row":
             # Flink's default per-record emission
-            # (GroupAggFunction.processElement): one transition per row
-            signs = sign.tolist() if sign is not None else [1] * len(batch)
-            recs = batch.to_dict("records")
-            for rec, sg in zip(recs, signs):
-                # a fresh accumulator finalizes to None -> +I on first row
+            # (GroupAggFunction.processElement): one transition per row;
+            # a fresh accumulator finalizes to None -> +I on first row
+            for _sd, kind, cells in _decode(batch, spec, kinds=consume_changelog):
                 old = _finalize(acc)
-                acc["n"] += sg
-                for out, (fn, col) in agg_items:
-                    if fn in ("sum", "avg"):
-                        v = rec[col]
-                        if not _is_null(v):  # NULL inputs are skipped
-                            acc[f"s_{out}"] += sg * float(v)
-                            acc[f"c_{out}"] += sg
-                    elif fn in ("min", "max"):
-                        _upd_minmax_scalar(acc, out, fn, rec[col], sg)
+                accs.apply(acc, cells, _SIGN[kind])
                 rows.extend(_transition(old, _finalize(acc), key_vals))
         else:
+            # one -U/+U pair per key per micro-batch: the rows fold in
+            # vectorized, in replay order
+            if spec.sort_cols is not None:
+                batch = batch.sort_values(spec.sort_cols, kind="mergesort")
+            sign = None
+            if consume_changelog:
+                sign = batch[CHANGE_COL].map(_SIGN)
+                if sign.isna().any():
+                    bad = batch[CHANGE_COL][sign.isna()].iloc[0]
+                    raise ValueError(f"unknown {CHANGE_COL} value {bad!r}")
             old = _finalize(acc)
             acc["n"] += int(sign.sum()) if sign is not None else len(batch)
-            for out, (fn, col) in agg_items:
+            for out, fn, i in accs.items:
                 if fn in ("sum", "avg"):
-                    vals = pd.to_numeric(batch[col], errors="coerce")
+                    vals = pd.to_numeric(batch[accs.cols[i]], errors="coerce")
                     nn = vals.notna()  # NULL/NaN inputs are skipped
                     if sign is not None:
                         acc[f"s_{out}"] += float((vals[nn] * sign[nn]).sum())
@@ -310,33 +526,21 @@ def to_retract_stream(
                         acc[f"s_{out}"] += float(vals[nn].sum())
                         acc[f"c_{out}"] += int(nn.sum())
                 elif fn in ("min", "max"):
-                    if need_multiset:
-                        for v, sg in zip(
-                            batch[col].tolist(),
-                            sign.tolist() if sign is not None else [1] * len(batch),
-                        ):
-                            _upd_minmax_scalar(acc, out, fn, v, sg)
+                    if accs.multiset:
+                        for v, sg in zip(batch[accs.cols[i]].tolist(), sign.tolist()):
+                            accs.minmax(acc, out, fn, v, sg)
                     else:
-                        bvals = batch[col].dropna()
+                        bvals = batch[accs.cols[i]].dropna()
                         if len(bvals):
                             bval = bvals.min() if fn == "min" else bvals.max()
-                            _upd_minmax_scalar(acc, out, fn, bval, 1)
-            rows.extend(_transition(old, _finalize(acc), key_vals))
-
+                            accs.minmax(acc, out, fn, bval, 1)
+            rows = _transition(old, _finalize(acc), key_vals)
         # keep drained groups' state (n=0) so a reborn key's
         # _change_seq continues monotonically past its -D; bound idle
         # keys with streaming.ops.apply_with_ttl if needed
-        state.update((pickle.dumps(acc), seq + len(rows)))
-        if rows:
-            cols = [f.name for f in out_schema.fields]
-            if emit_seq:
-                rows = [[*r, seq + i] for i, r in enumerate(rows)]
-            yield pd.DataFrame(rows, columns=cols)
+        return _sequenced(rows, seq, emit_seq)
 
-    # retract rows are immutable events -> append output mode
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, out_schema, state_schema, "append", "NoTimeout"
-    )
+    return _keyed_replay(sdf, keys, out_schema, accs.init, step)
 
 
 def retract_stream_to_table(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -358,25 +562,6 @@ def retract_stream_to_table(df: DataFrame, keys: list[str]) -> DataFrame:
 # OuterJoinRecordStateViews.java: record -> (appear-count,
 # numOfAssociations)).
 # ---------------------------------------------------------------------------
-
-
-def _norm_cell(v, integral: bool):
-    """Deterministic record-cell normalization across micro-batches:
-    pandas renders a batch's column as int64 or float64 depending on
-    whether THAT batch carries nulls (the other side's rows pad with
-    NaN), so 5 and 5.0 must hash equal in the state view."""
-    import pandas as pd
-
-    if v is None or (isinstance(v, float) and v != v) or v is pd.NaT:
-        return None
-    try:
-        if hasattr(v, "item"):
-            v = v.item()
-    except (ValueError, AttributeError):
-        pass
-    if integral and isinstance(v, float):
-        return int(v)
-    return v
 
 
 class _MultisetView:
@@ -539,8 +724,6 @@ def join_changelog(
     the same shape multi-job Flink pipelines take through Kafka
     topics. The two-level pipeline test demonstrates the staging.
     """
-    import pandas as pd
-
     on = [on] if isinstance(on, str) else list(on)
     if how not in ("inner", "left", "right", "full"):
         raise ValueError(f"how must be inner/left/right/full, got {how!r}")
@@ -557,9 +740,11 @@ def join_changelog(
         if miss:
             raise ValueError(f"{side} input is missing columns {miss}")
     # order columns ride both union branches, never the joined payload
-    skip = set(on) | {CHANGE_COL} | set(order_cols or ())
-    lpay = [c for c in left.columns if c not in skip]
-    rpay = [c for c in right.columns if c not in skip]
+    lspec, rspec = (
+        _input_spec(df, on, order_by, seq_fallback=False, drop_order=True)
+        for df in (left, right)
+    )
+    lpay, rpay = lspec.payload, rspec.payload
     overlap = set(lpay) & set(rpay)
     if overlap:
         raise ValueError(
@@ -570,7 +755,6 @@ def join_changelog(
     rfields = {f.name: f for f in right.schema.fields}
 
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType
 
     ocols = order_cols or []
     lu = left.select(
@@ -585,19 +769,10 @@ def join_changelog(
     )
     u = lu.unionByName(ru)
 
-    integral_types = ("int", "bigint", "smallint", "tinyint", "long")
-    l_int = [dict(left.dtypes)[c] in integral_types for c in lpay]
-    r_int = [dict(right.dtypes)[c] in integral_types for c in rpay]
-
     out_schema = StructType(
-        [StructField(CHANGE_COL, StringType())]
-        + [StructField(c, lfields[c].dataType) for c in on]
-        + [StructField(c, lfields[c].dataType, True) for c in lpay]
-        + [StructField(c, rfields[c].dataType, True) for c in rpay]
+        lspec.prefix  # _change_type, on, the left payload
+        + rspec.prefix[1 + len(on):]  # the right payload
         + ([StructField("_change_seq", LongType())] if emit_seq else [])
-    )
-    state_schema = StructType(
-        [StructField("blob", BinaryType()), StructField("seq", LongType())]
     )
 
     left_outer = how in ("left", "full")
@@ -612,12 +787,11 @@ def join_changelog(
             "r": _make_view(right_unique_key, "right", on, rpay),
         }
 
-    def _process_key(key_vals, records, st, seq0):
+    def step(key_list, batch, st, seq0):
         """The StreamingJoinOperator.processElement loop over one key's
         (side, kind, payload-tuple) records; st = {'l': {rec: [appear,
-        nassoc]}, 'r': ...}. Returns emitted rows."""
+        nassoc]}, 'r': ...}."""
         rows = []
-        key_list = list(key_vals)
 
         def emit(kind, lrec, rrec):
             rows.append([
@@ -632,7 +806,7 @@ def join_changelog(
             else:
                 emit(kind, other_rec, in_rec)
 
-        for side, kind, rec in records:
+        for side, kind, rec in _decode(batch, lspec, rspec):
             input_is_left = side == 0
             iview = st["l" if input_is_left else "r"]
             oview = st["r" if input_is_left else "l"]
@@ -718,64 +892,9 @@ def join_changelog(
                                 for _ in range(meta[0]):
                                     joined(INSERT, None, otup, input_is_left)
                             meta[1] -= 1
-        if emit_seq:
-            rows = [[*r, seq0 + i] for i, r in enumerate(rows)]
-        return rows
+        return _sequenced(rows, seq0, emit_seq)
 
-    _KINDS_OK = {INSERT, UPDATE_AFTER, UPDATE_BEFORE, DELETE}
-
-    def _batch_records(batch):
-        if order_cols is not None:
-            batch = batch.sort_values(order_cols, kind="mergesort")
-        sides = batch["__side"].tolist()
-        kinds = batch[CHANGE_COL].tolist()
-        lvals = [batch[c].tolist() for c in lpay]
-        rvals = [batch[c].tolist() for c in rpay]
-        recs = []
-        for i, (sd, kd) in enumerate(zip(sides, kinds)):
-            if kd not in _KINDS_OK:
-                raise ValueError(f"unknown {CHANGE_COL} value {kd!r}")
-            if sd == 0:
-                tup = tuple(
-                    _norm_cell(col[i], ii) for col, ii in zip(lvals, l_int)
-                )
-            else:
-                tup = tuple(
-                    _norm_cell(col[i], ii) for col, ii in zip(rvals, r_int)
-                )
-            recs.append((sd, kd, tup))
-        return recs
-
-    cols = [f.name for f in out_schema.fields]
-
-    if u.isStreaming:
-
-        def run(key, pdfs, state):
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if not len(batch):
-                return
-            if state.exists:
-                blob, seq = state.get
-                st = pickle.loads(blob)
-            else:
-                st, seq = _fresh_state(), 0
-            rows = _process_key(key, _batch_records(batch), st, seq)
-            state.update((pickle.dumps(st), seq + len(rows)))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-        return u.groupBy(*on).applyInPandasWithState(
-            run, out_schema, state_schema, "append", "NoTimeout"
-        )
-
-    def run_batch(key, batch):
-        st = _fresh_state()
-        rows = _process_key(key, _batch_records(batch), st, 0)
-        return pd.DataFrame(rows, columns=cols)
-
-    return repartition_for_python_stage(u, on).groupBy(*on).applyInPandas(
-        run_batch, out_schema
-    )
+    return _keyed_replay(u, on, out_schema, _fresh_state, step)
 
 
 # ---------------------------------------------------------------------------
@@ -852,6 +971,7 @@ def window_agg_changelog(
     only (closed windows are purged on fire), so state is bounded by
     size/slide x the key's in-flight event-time spread, not by history.
     """
+    import logging
     import math
 
     import pandas as pd
@@ -860,11 +980,7 @@ def window_agg_changelog(
 
     keys = [keys] if isinstance(keys, str) else list(keys)
     fields = {f.name: f for f in sdf.schema.fields}
-    for out, (fn, col) in aggs.items():
-        if fn not in _FNS:
-            raise ValueError(f"unsupported aggregate {fn!r} (use {_FNS})")
-        if fn != "count" and (col is None or col not in fields):
-            raise ValueError(f"aggregate {out!r}: unknown input column {col!r}")
+    accs = _Aggs(aggs, fields, consume_changelog)
     if time_col not in fields:
         raise ValueError(f"unknown time column {time_col!r}")
     if consume_changelog and CHANGE_COL not in fields:
@@ -882,6 +998,8 @@ def window_agg_changelog(
     for v in (size_t, slide_t, gap_t):
         if v is not None and v <= 0:
             raise ValueError("window size/slide/gap must be positive")
+    # cells: the aggregate inputs, then the event time
+    spec = _input_spec(sdf, keys, order_by, payload=[*accs.cols, time_col])
 
     from pyspark.sql.types import TimestampType
 
@@ -892,57 +1010,9 @@ def window_agg_changelog(
             StructField("window_start", wtype),
             StructField("window_end", wtype),
             *[fields[k] for k in keys],
-            *[
-                StructField(out, _out_field(fn, fields.get(col or "", None)))
-                for out, (fn, col) in aggs.items()
-            ],
+            *accs.fields,
         ]
     )
-    state_schema = StructType(
-        [StructField("blob", BinaryType()), StructField("wm", DoubleType())]
-    )
-    agg_items = list(aggs.items())
-    need_multiset = consume_changelog and any(
-        fn in ("min", "max") for _o, (fn, _c) in agg_items
-    )
-    _SIGN = {INSERT: 1, UPDATE_AFTER: 1, UPDATE_BEFORE: -1, DELETE: -1}
-    cols = [f.name for f in out_schema.fields]
-
-    def _init_acc():
-        acc = {"n": 0}
-        for out, (fn, col) in agg_items:
-            if fn in ("sum", "avg"):
-                acc[f"s_{out}"] = 0.0
-                acc[f"c_{out}"] = 0
-            elif fn in ("min", "max"):
-                acc[f"m_{out}"] = [] if need_multiset else None
-        return acc
-
-    def _finalize(acc):
-        row = []
-        for out, (fn, col) in agg_items:
-            if fn == "count":
-                row.append(int(acc["n"]) if acc["n"] > 0 else 0)
-            elif fn == "sum":
-                row.append(float(acc[f"s_{out}"]) if acc[f"c_{out}"] > 0 else None)
-            elif fn == "avg":
-                row.append(
-                    float(acc[f"s_{out}"]) / acc[f"c_{out}"]
-                    if acc[f"c_{out}"] > 0
-                    else None
-                )
-            else:
-                if need_multiset:
-                    ms = acc[f"m_{out}"]
-                    row.append(
-                        None if not ms else (min(ms) if fn == "min" else max(ms))
-                    )
-                else:
-                    row.append(acc[f"m_{out}"])
-        return row
-
-    def _is_null(v):
-        return v is None or v != v
 
     def _windows_of(tick: float):
         # fixed assigners return (start, end) namespaces directly
@@ -957,81 +1027,37 @@ def window_agg_changelog(
             ws -= slide_t
         return tuple(out)
 
-    def _tick_series(batch):
-        if is_time:
-            return (
-                batch[time_col]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .astype("float64")
-            )
-        return batch[time_col].astype("float64")
+    def _fire(key_vals, wins, wm):
+        rows = []
+        for ws, we in sorted(w for w in wins if w[1] <= wm):
+            acc = wins.pop((ws, we))
+            if is_time:
+                b0 = pd.Timestamp(int(ws), unit="us")
+                b1 = pd.Timestamp(int(we), unit="us")
+            else:
+                b0, b1 = ws, we
+            rows.append([INSERT, b0, b1, *key_vals, *accs.values(acc)])
+        return rows
 
-    def _process(key_vals, batch, wins, wm):
-        """Apply one (sorted) batch to the per-window accumulators with
-        the CURRENT watermark for lateness, return #late-dropped."""
-        tick = _tick_series(batch).tolist()
-        if consume_changelog:
-            signs = batch[CHANGE_COL].map(_SIGN)
-            if signs.isna().any():
-                bad = batch[CHANGE_COL][signs.isna()].iloc[0]
-                raise ValueError(f"unknown {CHANGE_COL} value {bad!r}")
-            signs = signs.tolist()
-        else:
-            signs = [1] * len(batch)
-        vals = {
-            col: batch[col].tolist()
-            for _o, (fn, col) in agg_items
-            if fn != "count"
-        }
-        def _apply(acc, i, sg):
-            acc["n"] += sg
-            for out, (fn, col) in agg_items:
-                if fn in ("sum", "avg"):
-                    v = vals[col][i]
-                    if not _is_null(v):
-                        acc[f"s_{out}"] += sg * float(v)
-                        acc[f"c_{out}"] += sg
-                elif fn in ("min", "max"):
-                    v = vals[col][i]
-                    if _is_null(v):
-                        continue
-                    if need_multiset:
-                        ms = acc[f"m_{out}"]
-                        if sg > 0:
-                            ms.append(v)
-                        else:
-                            ms.remove(v)  # loud on retract-first
-                    else:
-                        cur = acc[f"m_{out}"]
-                        acc[f"m_{out}"] = (
-                            v
-                            if cur is None
-                            else (min(cur, v) if fn == "min" else max(cur, v))
-                        )
-
-        def _merge_accs(a, b):
-            a["n"] += b["n"]
-            for out, (fn, col) in agg_items:
-                if fn in ("sum", "avg"):
-                    a[f"s_{out}"] += b[f"s_{out}"]
-                    a[f"c_{out}"] += b[f"c_{out}"]
-                elif fn in ("min", "max"):
-                    if need_multiset:
-                        a[f"m_{out}"].extend(b[f"m_{out}"])
-                    else:
-                        bv = b[f"m_{out}"]
-                        cur = a[f"m_{out}"]
-                        if bv is not None:
-                            a[f"m_{out}"] = (
-                                bv
-                                if cur is None
-                                else (min(cur, bv) if fn == "min" else max(cur, bv))
-                            )
-            return a
-
-        late = 0
-        for i, (t, sg) in enumerate(zip(tick, signs)):
+    def step(key_vals, batch, wins, wm):
+        """Apply one key's batch to its open windows ``wins`` under the
+        watermark ``wm`` in force (the previous batch's maximum event
+        time), then fire the windows the batch's maximum closes. ``wm``
+        None is the end of input (the batch route): nothing is late and
+        every touched window fires."""
+        cut = float("-inf") if wm is None else wm
+        hi, late = cut, 0
+        for _sd, kind, cells in _decode(batch, spec, kinds=consume_changelog):
+            t = cells[-1]
+            if t is None:
+                raise ValueError(
+                    f"window_agg_changelog: null event time in column "
+                    f"{time_col!r} for key {key_vals!r} (a row without a "
+                    "time has no window; Flink rejects a NULL rowtime too)"
+                )
+            t = float(t.value // 1000) if is_time else float(t)  # µs ticks
+            hi = max(hi, t)
+            sg = _SIGN[kind]
             if gap_t is not None:
                 # SessionWindowAssigner: the row's proto-window
                 # [t, t+gap) joins the merge set for EVERY RowKind
@@ -1046,91 +1072,36 @@ def window_agg_changelog(
                 for w in parts:
                     ws = min(ws, w[0])
                     we = max(we, w[1])
-                if we <= wm:
+                if we <= cut:
                     late += 1  # a session in the cleaned-up past
                     continue
-                acc = _init_acc()
+                acc = accs.init()
                 for w in parts:
-                    _merge_accs(acc, wins.pop(w))
-                _apply(acc, i, sg)
+                    accs.merge(acc, wins.pop(w))
+                accs.apply(acc, cells, sg)
                 wins[(ws, we)] = acc
                 continue
             dropped = True
             for w in _windows_of(t):
-                if w[1] <= wm:
+                if w[1] <= cut:
                     continue  # window already fired + cleaned
                 dropped = False
                 acc = wins.get(w)
                 if acc is None:
-                    acc = wins[w] = _init_acc()
-                _apply(acc, i, sg)
+                    acc = wins[w] = accs.init()
+                accs.apply(acc, cells, sg)
             late += dropped
-        return late
+        if late:
+            logging.getLogger(__name__).warning(
+                "window_agg_changelog: dropped %d late row(s) for key "
+                "%r (window already fired — lateRecordsDroppedRate)",
+                late, key_vals,
+            )
+        wm = float("inf") if wm is None else hi
+        return _fire(key_vals, wins, wm), wm
 
-    _wagg_order_cols, _ = _order_spec(order_by)
-    for _c in _wagg_order_cols or ():
-        if _c not in sdf.columns:
-            raise ValueError(f"unknown order_by column {_c!r}")
-
-    def _sorted(batch):
-        sort_col = _wagg_order_cols if _wagg_order_cols is not None else (
-            "_change_seq" if "_change_seq" in batch.columns else None
-        )
-        if sort_col is not None:
-            batch = batch.sort_values(sort_col, kind="mergesort")
-        return batch
-
-    def _fire(key_vals, wins, wm):
-        rows = []
-        for ws, we in sorted(w for w in wins if w[1] <= wm):
-            acc = wins.pop((ws, we))
-            if is_time:
-                b0 = pd.Timestamp(int(ws), unit="us")
-                b1 = pd.Timestamp(int(we), unit="us")
-            else:
-                b0, b1 = ws, we
-            rows.append([INSERT, b0, b1, *key_vals, *_finalize(acc)])
-        return rows
-
-    if sdf.isStreaming:
-
-        def run(key, pdfs, state):
-            if state.exists:
-                blob, wm = state.get
-                wins = pickle.loads(blob)
-            else:
-                wins, wm = {}, float("-inf")
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if not len(batch):
-                return
-            batch = _sorted(batch)
-            late = _process(list(key), batch, wins, wm)
-            if late:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "window_agg_changelog: dropped %d late row(s) for key "
-                    "%r (window already fired — lateRecordsDroppedRate)",
-                    late, key,
-                )
-            wm = max(wm, float(_tick_series(batch).max()))
-            rows = _fire(list(key), wins, wm)
-            state.update((pickle.dumps(wins), wm))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            run, out_schema, state_schema, "append", "NoTimeout"
-        )
-
-    def run_batch(key, batch):
-        wins: dict = {}
-        _process(list(key), _sorted(batch), wins, float("-inf"))
-        rows = _fire(list(key), wins, float("inf"))
-        return pd.DataFrame(rows, columns=cols)
-
-    return repartition_for_python_stage(sdf, keys).groupBy(*keys).applyInPandas(
-        run_batch, out_schema
+    return _keyed_replay(
+        sdf, keys, out_schema, dict, step, aux0=float("-inf"), batch_aux=None
     )
 
 
@@ -1192,9 +1163,6 @@ def retractable_topn(
     answer for an updating input.
     """
     import bisect
-    import functools
-
-    import pandas as pd
 
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     fields = {f.name: f for f in sdf.schema.fields}
@@ -1207,53 +1175,27 @@ def retractable_topn(
             raise ValueError(f"unknown sort column {c!r}")
         if d not in ("asc", "desc"):
             raise ValueError(f"sort direction must be asc/desc, got {d!r}")
-    _rt_order_cols, _rt_order_skip = _order_spec(order_by)
-    for _c in _rt_order_cols or ():
-        if _c not in fields:
-            raise ValueError(f"unknown order_by column {_c!r}")
-    skip = set(keys) | {CHANGE_COL} | _rt_order_skip
-    payload = [c for c in sdf.columns if c not in skip]
+    spec = _input_spec(sdf, keys, order_by)
+    payload = spec.payload
     miss = [c for c, _d in sort_cols if c not in payload]
     if miss:
         raise ValueError(f"sort columns {miss} must be payload columns")
     sort_idx = [(payload.index(c), d == "desc") for c, d in sort_cols]
+    cmp = functools.partial(_cmp, [desc for _i, desc in sort_idx])
     use_rownum = output_rank_number or rank_start > 1
 
-    integral_types = ("int", "bigint", "smallint", "tinyint", "long")
-    pay_int = [dict(sdf.dtypes)[c] in integral_types for c in payload]
-
     out_schema = StructType(
-        [StructField(CHANGE_COL, StringType())]
-        + [fields[k] for k in keys]
-        + [StructField(c, fields[c].dataType, True) for c in payload]
+        spec.prefix
         + ([StructField("rank_num", LongType())] if output_rank_number else [])
         + [StructField("_change_seq", LongType())]
     )
-    state_schema = StructType(
-        [StructField("blob", BinaryType()), StructField("seq", LongType())]
-    )
-    cols = [f.name for f in out_schema.fields]
 
     def _sk(rec):
         return tuple(rec[i] for i, _desc in sort_idx)
 
-    def _cmp(a, b):
-        for (i, desc), va, vb in zip(sort_idx, a, b):
-            if va == vb:
-                continue
-            if va is None:
-                return 1  # NULLs last in ascending order
-            if vb is None:
-                return -1
-            lt = va < vb
-            if desc:
-                lt = not lt
-            return -1 if lt else 1
-        return 0
-
-    def _process_key(key_vals, records, st, seq0):
+    def step(key_list, batch, st, seq0):
         # cmp_to_key wrappers aren't picklable: build per invocation
-        _key_of = functools.cmp_to_key(_cmp)
+        _key_of = functools.cmp_to_key(cmp)
         smap, ds = st["sm"], st["ds"]
         # Parallel sorted list of live sort keys — the TreeMap's key
         # order, maintained incrementally. Rebuilt once when restoring
@@ -1262,7 +1204,6 @@ def retractable_topn(
         if sl is None or len(sl) != len(smap):
             sl = st["sl"] = sorted(smap, key=_key_of)
         rows = []
-        key_list = list(key_vals)
 
         def coll(kind, rec, rank=None, checked=True):
             # AbstractTopNFunction.collect*(row, rank): range-checked;
@@ -1411,7 +1352,7 @@ def retractable_topn(
                     next_rank += smap[key]
             return finds
 
-        for kind, rec in records:
+        for _sd, kind, rec in _decode(batch, spec):
             sk = _sk(rec)
             if kind in (INSERT, UPDATE_AFTER):
                 if sk not in smap:
@@ -1453,55 +1394,10 @@ def retractable_topn(
                                 break
                         if not inputs:
                             ds.pop(sk, None)
-        if rows:
-            rows = [[*r, seq0 + i] for i, r in enumerate(rows)]
-        return rows
+        return _sequenced(rows, seq0)
 
-    _KINDS_OK = {INSERT, UPDATE_AFTER, UPDATE_BEFORE, DELETE}
-
-    def _records(batch):
-        if _rt_order_cols is not None:
-            batch = batch.sort_values(_rt_order_cols, kind="mergesort")
-        elif "_change_seq" in batch.columns:
-            batch = batch.sort_values("_change_seq", kind="mergesort")
-        kinds = batch[CHANGE_COL].tolist()
-        vals = [batch[c].tolist() for c in payload]
-        recs = []
-        for i, kd in enumerate(kinds):
-            if kd not in _KINDS_OK:
-                raise ValueError(f"unknown {CHANGE_COL} value {kd!r}")
-            recs.append(
-                (kd, tuple(_norm_cell(col[i], ii) for col, ii in zip(vals, pay_int)))
-            )
-        return recs
-
-    if sdf.isStreaming:
-
-        def run(key, pdfs, state):
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if not len(batch):
-                return
-            if state.exists:
-                blob, seq = state.get
-                st = pickle.loads(blob)
-            else:
-                st, seq = {"sm": {}, "ds": {}}, 0
-            rows = _process_key(key, _records(batch), st, seq)
-            state.update((pickle.dumps(st), seq + len(rows)))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            run, out_schema, state_schema, "append", "NoTimeout"
-        )
-
-    def run_batch(key, batch):
-        st = {"sm": {}, "ds": {}}
-        rows = _process_key(key, _records(batch), st, 0)
-        return pd.DataFrame(rows, columns=cols)
-
-    return repartition_for_python_stage(sdf, keys).groupBy(*keys).applyInPandas(
-        run_batch, out_schema
+    return _keyed_replay(
+        sdf, keys, out_schema, lambda: {"sm": {}, "ds": {}}, step
     )
 
 
@@ -1561,10 +1457,6 @@ def updatable_topn(
     Batch inputs replay through ``applyInPandas`` (the replay-equality
     oracle). Output schema matches :func:`retractable_topn`.
     """
-    import functools
-
-    import pandas as pd
-
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     rks = [row_key] if isinstance(row_key, str) else list(row_key)
     fields = {f.name: f for f in sdf.schema.fields}
@@ -1577,32 +1469,20 @@ def updatable_topn(
             raise ValueError(f"unknown sort column {c!r}")
         if d not in ("asc", "desc"):
             raise ValueError(f"sort direction must be asc/desc, got {d!r}")
-    _ut_order_cols, _ut_order_skip = _order_spec(order_by)
-    for _c in _ut_order_cols or ():
-        if _c not in fields:
-            raise ValueError(f"unknown order_by column {_c!r}")
-    skip = set(keys) | {CHANGE_COL} | _ut_order_skip
-    payload = [c for c in sdf.columns if c not in skip]
+    spec = _input_spec(sdf, keys, order_by)
+    payload = spec.payload
     for c in rks:
         if c not in payload:
             raise ValueError(f"row_key column {c!r} must be a payload column")
     sort_idx = [(payload.index(c), d == "desc") for c, d in sort_cols]
+    cmp = functools.partial(_cmp, [desc for _i, desc in sort_idx])
     rk_idx = [payload.index(c) for c in rks]
 
-    integral_types = ("int", "bigint", "smallint", "tinyint", "long")
-    pay_int = [dict(sdf.dtypes)[c] in integral_types for c in payload]
-
     out_schema = StructType(
-        [StructField(CHANGE_COL, StringType())]
-        + [fields[k] for k in keys]
-        + [StructField(c, fields[c].dataType, True) for c in payload]
+        spec.prefix
         + ([StructField("rank_num", LongType())] if output_rank_number else [])
         + [StructField("_change_seq", LongType())]
     )
-    state_schema = StructType(
-        [StructField("blob", BinaryType()), StructField("seq", LongType())]
-    )
-    cols = [f.name for f in out_schema.fields]
 
     def _sk(rec):
         return tuple(rec[i] for i, _d in sort_idx)
@@ -1610,25 +1490,10 @@ def updatable_topn(
     def _rk(rec):
         return tuple(rec[i] for i in rk_idx)
 
-    def _cmp(a, b):
-        for (i, desc), va, vb in zip(sort_idx, a, b):
-            if va == vb:
-                continue
-            if va is None:
-                return 1
-            if vb is None:
-                return -1
-            lt = va < vb
-            if desc:
-                lt = not lt
-            return -1 if lt else 1
-        return 0
-
-    def _process_key(key_vals, records, st, seq0):
-        _key_of = functools.cmp_to_key(_cmp)
+    def step(key_list, batch, st, seq0):
+        _key_of = functools.cmp_to_key(cmp)
         buf, rkmap = st["buf"], st["rk"]
         rows = []
-        key_list = list(key_vals)
 
         def coll(kind, rec, rank=None, checked=True):
             if kind == UPDATE_BEFORE and not generate_update_before:
@@ -1649,7 +1514,7 @@ def updatable_topn(
             if not buf:
                 return True
             worst = max(buf, key=_key_of)
-            if _cmp(sk, worst) < 0:
+            if cmp(sk, worst) < 0:
                 return True
             return sum(len(v) for v in buf.values()) < rank_end
 
@@ -1657,7 +1522,7 @@ def updatable_topn(
             cur = 1
             for key in _skeys():
                 if key == sk:
-                    for inner, r in enumerate(buf[key], 1):
+                    for r in buf[key]:
                         if r == rk:
                             return cur
                         cur += 1
@@ -1703,7 +1568,7 @@ def updatable_topn(
                             cur_row = prev
                             cur_rank += 1
                             i += 1
-                    elif _cmp(key, old_sk) <= 0:
+                    elif cmp(key, old_sk) <= 0:
                         # rank improved: shift only rows above the old rank
                         i = 0
                         while i < len(rkeys) and cur_rank < old_rank:
@@ -1779,7 +1644,7 @@ def updatable_topn(
                         coll(DELETE, last, checked=False)
                 coll(INSERT, in_rec, checked=False)
 
-        for kind, rec in records:
+        for _sd, kind, rec in _decode(batch, spec):
             if kind in (UPDATE_BEFORE, DELETE):
                 raise ValueError(
                     "updatable_topn consumes an UPSERT stream: -U/-D "
@@ -1790,55 +1655,10 @@ def updatable_topn(
                 with_rownum(rec)
             else:
                 without_rownum(rec)
-        if rows:
-            rows = [[*r, seq0 + i] for i, r in enumerate(rows)]
-        return rows
+        return _sequenced(rows, seq0)
 
-    _KINDS_OK = {INSERT, UPDATE_AFTER, UPDATE_BEFORE, DELETE}
-
-    def _records(batch):
-        if _ut_order_cols is not None:
-            batch = batch.sort_values(_ut_order_cols, kind="mergesort")
-        elif "_change_seq" in batch.columns:
-            batch = batch.sort_values("_change_seq", kind="mergesort")
-        kinds = batch[CHANGE_COL].tolist()
-        vals = [batch[c].tolist() for c in payload]
-        recs = []
-        for i, kd in enumerate(kinds):
-            if kd not in _KINDS_OK:
-                raise ValueError(f"unknown {CHANGE_COL} value {kd!r}")
-            recs.append(
-                (kd, tuple(_norm_cell(col[i], ii) for col, ii in zip(vals, pay_int)))
-            )
-        return recs
-
-    if sdf.isStreaming:
-
-        def run(key, pdfs, state):
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if not len(batch):
-                return
-            if state.exists:
-                blob, seq = state.get
-                st = pickle.loads(blob)
-            else:
-                st, seq = {"buf": {}, "rk": {}}, 0
-            rows = _process_key(key, _records(batch), st, seq)
-            state.update((pickle.dumps(st), seq + len(rows)))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            run, out_schema, state_schema, "append", "NoTimeout"
-        )
-
-    def run_batch(key, batch):
-        st = {"buf": {}, "rk": {}}
-        rows = _process_key(key, _records(batch), st, 0)
-        return pd.DataFrame(rows, columns=cols)
-
-    return repartition_for_python_stage(sdf, keys).groupBy(*keys).applyInPandas(
-        run_batch, out_schema
+    return _keyed_replay(
+        sdf, keys, out_schema, lambda: {"buf": {}, "rk": {}}, step
     )
 
 
@@ -1888,55 +1708,24 @@ def dedup_keep_last_changelog(
     100 TB: one shuffle on the key; state = ONE row per live key (the
     ValueState), the smallest of the changelog operators.
     """
-    import pandas as pd
-
     keys = [keys] if isinstance(keys, str) else list(keys)
-    fields = {f.name: f for f in sdf.schema.fields}
-    if consume_changelog and CHANGE_COL not in fields:
+    if consume_changelog and CHANGE_COL not in sdf.columns:
         raise ValueError(
             f"consume_changelog=True needs a {CHANGE_COL!r} column on the input"
         )
-    _dl_order_cols, _dl_order_skip = _order_spec(order_by)
-    for _c in _dl_order_cols or ():
-        if _c not in fields:
-            raise ValueError(f"unknown order_by column {_c!r}")
-    skip = set(keys) | {CHANGE_COL} | _dl_order_skip
-    payload = [c for c in sdf.columns if c not in skip]
+    spec = _input_spec(sdf, keys, order_by)
+    out_schema = StructType(spec.prefix + [StructField("_change_seq", LongType())])
 
-    integral_types = ("int", "bigint", "smallint", "tinyint", "long")
-    pay_int = [dict(sdf.dtypes)[c] in integral_types for c in payload]
-
-    out_schema = StructType(
-        [StructField(CHANGE_COL, StringType())]
-        + [fields[k] for k in keys]
-        + [StructField(c, fields[c].dataType, True) for c in payload]
-        + [StructField("_change_seq", LongType())]
-    )
-    state_schema = StructType(
-        [StructField("blob", BinaryType()), StructField("seq", LongType())]
-    )
-    cols = [f.name for f in out_schema.fields]
-
-    def _process_key(key_vals, records, st, seq0):
+    def step(key_list, batch, st, seq0):
         rows = []
-        key_list = list(key_vals)
-        prev = st.get("row")
+        prev = st["row"]
 
         def emit(kind, rec):
             rows.append([kind, *key_list, *rec])
 
-        for kind, rec in records:
-            if not consume_changelog:
-                if kind != INSERT:
-                    raise ValueError(
-                        "append-mode keep-last dedup got a non-INSERT row "
-                        f"({kind!r}); pass consume_changelog=True "
-                        "(DeduplicateFunctionHelper.checkInsertOnly)"
-                    )
-                upsert = True
-            else:
-                upsert = kind in (INSERT, UPDATE_AFTER)
-            if upsert:
+        # an append input decodes as all +I
+        for _sd, kind, rec in _decode(batch, spec, kinds=consume_changelog):
+            if kind in (INSERT, UPDATE_AFTER):
                 if prev is None:
                     emit(INSERT if generate_insert else UPDATE_AFTER, rec)
                 elif prev == rec:
@@ -1952,56 +1741,6 @@ def dedup_keep_last_changelog(
                     prev = None
                 # nothing to do if removing a non-existent row
         st["row"] = prev
-        if rows:
-            rows = [[*r, seq0 + i] for i, r in enumerate(rows)]
-        return rows
+        return _sequenced(rows, seq0)
 
-    _KINDS_OK = {INSERT, UPDATE_AFTER, UPDATE_BEFORE, DELETE}
-
-    def _records(batch):
-        if _dl_order_cols is not None:
-            batch = batch.sort_values(_dl_order_cols, kind="mergesort")
-        elif "_change_seq" in batch.columns:
-            batch = batch.sort_values("_change_seq", kind="mergesort")
-        if consume_changelog:
-            kinds = batch[CHANGE_COL].tolist()
-        else:
-            kinds = [INSERT] * len(batch)
-        vals = [batch[c].tolist() for c in payload]
-        recs = []
-        for i, kd in enumerate(kinds):
-            if kd not in _KINDS_OK:
-                raise ValueError(f"unknown {CHANGE_COL} value {kd!r}")
-            recs.append(
-                (kd, tuple(_norm_cell(col[i], ii) for col, ii in zip(vals, pay_int)))
-            )
-        return recs
-
-    if sdf.isStreaming:
-
-        def run(key, pdfs, state):
-            batch = pd.concat(list(pdfs), ignore_index=True)
-            if not len(batch):
-                return
-            if state.exists:
-                blob, seq = state.get
-                st = pickle.loads(blob)
-            else:
-                st, seq = {"row": None}, 0
-            rows = _process_key(key, _records(batch), st, seq)
-            state.update((pickle.dumps(st), seq + len(rows)))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-        return sdf.groupBy(*keys).applyInPandasWithState(
-            run, out_schema, state_schema, "append", "NoTimeout"
-        )
-
-    def run_batch(key, batch):
-        st = {"row": None}
-        rows = _process_key(key, _records(batch), st, 0)
-        return pd.DataFrame(rows, columns=cols)
-
-    return repartition_for_python_stage(sdf, keys).groupBy(*keys).applyInPandas(
-        run_batch, out_schema
-    )
+    return _keyed_replay(sdf, keys, out_schema, lambda: {"row": None}, step)

@@ -333,6 +333,12 @@ def test_to_retract_stream_row_granularity_single_batch(spark, tmp_dir):
         "Bob": [("+I", 1)],
         "Liz": [("+I", 1)],
     }, per_key
+    # a batch input replays the same rows through the batch route
+    batch = to_retract_stream(
+        df, "user", {"cnt": ("count", None)},
+        granularity="row", order_by="seq",
+    )
+    assert sorted(map(tuple, batch.collect())) == sorted(map(tuple, got))
 
 
 def test_to_retract_stream_row_equals_batch_final_state(spark, tmp_dir):
@@ -1688,3 +1694,104 @@ def test_window_agg_changelog_order_by_list(spark):
     assert sorted(map(tuple, old.select(*cols).collect())) == sorted(
         map(tuple, new.select(*cols).collect())
     )
+
+
+def test_window_agg_changelog_null_event_time_is_loud(spark, tmp_dir):
+    """A NULL event time fails loudly, naming the time column, for every
+    assigner and on both routes (Flink rejects a NULL rowtime too): a
+    tumble/hop row cannot be assigned a window, and a session row would
+    open a window that never fires."""
+    import os
+
+    import pytest
+
+    from tests.test_streaming import run_to_memory
+    from reshape_on_flink_spark.streaming.changelog import window_agg_changelog
+    from reshape_on_flink_spark.streaming.source import chunked_replay
+
+    log = _wlog(spark, [
+        (1, INSERT, 1, 1.0, 5.0),
+        (2, INSERT, 1, None, 7.0),
+        (3, INSERT, 1, 2.0, 1.0),
+    ])
+    for kw in ({"size": 10.0}, {"size": 10.0, "slide": 5.0}, {"gap": 10.0}):
+        out = window_agg_changelog(log, "k", "t", _WAGGS, order_by="seq", **kw)
+        with pytest.raises(Exception, match="null event time in column 't'"):
+            out.collect()
+    stream = chunked_replay(
+        spark, log, os.path.join(tmp_dir, "wnull"), n_chunks=1, order_col="seq"
+    )
+    sout = window_agg_changelog(stream, "k", "t", _WAGGS, gap=10.0, order_by="seq")
+    with pytest.raises(Exception, match="null event time in column 't'"):
+        run_to_memory(spark, sout, "wnull_out", tmp_dir, mode="append")
+
+
+# ---------------------------------------------------------------------
+# dedup_keep_last_changelog — DeduplicateFunctionHelper.java:42-147
+# (processLastRowOnProcTime / processLastRowOnChangelog emission)
+# ---------------------------------------------------------------------
+
+
+def _dedup_rows(out_df):
+    return sorted(
+        (r.k, r._change_seq, r._change_type, r.v) for r in out_df.collect()
+    )
+
+
+def test_dedup_keep_last_changelog_append_and_tombstone(spark):
+    """Append input: first row +I, a replacement -U(old)/+U(new), a row
+    equal to the stored one emits nothing. Changelog input: a -D
+    tombstone emits -D with the STORED row, and the key starts over."""
+    from reshape_on_flink_spark.streaming.changelog import dedup_keep_last_changelog
+
+    df = spark.createDataFrame(
+        [(0, 1, "a"), (1, 1, "b"), (2, 1, "b"), (3, 2, "x")],
+        "oseq long, k int, v string",
+    )
+    out = dedup_keep_last_changelog(df, "k", order_by="oseq")
+    assert out.columns == [CHANGE_COL, "k", "v", "_change_seq"]
+    assert _dedup_rows(out) == [
+        (1, 0, "+I", "a"), (1, 1, "-U", "a"), (1, 2, "+U", "b"),
+        (2, 0, "+I", "x"),
+    ]
+
+    log = spark.createDataFrame(
+        [(0, INSERT, 1, "a"), (1, DELETE, 1, None), (2, INSERT, 1, "c")],
+        f"oseq long, {CHANGE_COL} string, k int, v string",
+    )
+    out = dedup_keep_last_changelog(
+        log, "k", consume_changelog=True, order_by="oseq"
+    )
+    assert _dedup_rows(out) == [
+        (1, 0, "+I", "a"), (1, 1, "-D", "a"), (1, 2, "+I", "c"),
+    ]
+
+
+def test_dedup_keep_last_changelog_stream_equals_batch(spark, tmp_dir):
+    """Streaming route across 3 chunks == batch route (state carries the
+    stored row and the _change_seq across micro-batches)."""
+    import os
+
+    from tests.test_streaming import run_to_memory
+    from reshape_on_flink_spark.streaming.changelog import dedup_keep_last_changelog
+    from reshape_on_flink_spark.streaming.source import chunked_replay
+
+    kinds = [INSERT, UPDATE_AFTER, UPDATE_AFTER, DELETE, INSERT, UPDATE_AFTER]
+    rows = [
+        (i, kinds[i % len(kinds)], k, "abc"[(i // 2) % 3])
+        for i in range(18)
+        for k in (i % 3,)
+    ]
+    log = spark.createDataFrame(
+        rows, f"oseq long, {CHANGE_COL} string, k int, v string"
+    )
+    kw = dict(consume_changelog=True, order_by="oseq")
+    expected = _dedup_rows(dedup_keep_last_changelog(log, "k", **kw))
+    stream = chunked_replay(
+        spark, log, os.path.join(tmp_dir, "dedup"), n_chunks=3, order_col="oseq"
+    )
+    got = _dedup_rows(run_to_memory(
+        spark, dedup_keep_last_changelog(stream, "k", **kw),
+        "dedup_out", tmp_dir, mode="append",
+    ))
+    assert got == expected and len(got) >= 12, (len(got), got)
