@@ -12,7 +12,8 @@ Scale defaults (tuned for the 100 TB target, harmless at test SF):
   batch half of the reference's Reshape mechanism (SURVEY.md §0.5) — Spark
   re-plans skewed shuffle partitions at runtime instead of rerouting records.
 - ``spark.sql.shuffle.partitions`` is a *starting* parallelism; AQE coalesces
-  down and skew-splits up, so one number serves sf0.001 through 100 TB.
+  batch shuffles down and skew-splits them up, so one number serves sf0.001
+  through 100 TB. It starts at the task slots (see get_spark).
 - Arrow enabled for every Python<->JVM hop (pandas UDFs, toPandas).
 - Session timezone pinned to UTC so event-time semantics are absolute.
 """
@@ -63,12 +64,27 @@ def get_spark(
     by reference import the package whatever the driver's cwd. On a
     cluster the executors' Python must be able to import the package,
     as the engine's UDFs already required.
+
+    One wave per stage: ``spark.sql.shuffle.partitions`` and
+    ``spark.default.parallelism`` are the task slots (``cores``), not
+    more. AQE coalesces a batch shuffle by bytes whatever its starting
+    width, but a streaming query fixes its state partitions from
+    ``spark.sql.shuffle.partitions`` when it starts and never coalesces
+    them, so every micro-batch of an ``applyInPandasWithState`` stage
+    (the changelog operators' keyed replay) runs exactly that many
+    tasks. Each pays a fixed cost whatever its input (Python worker,
+    state-store load and commit: 0.25-0.46 s per task on a 4-core box),
+    so a width above the slots buys no parallelism, only a second wave
+    of that cost: on 4 slots the changelog join's stateful stage takes
+    0.82-1.13 s per micro-batch at 8 state partitions and 0.56-0.71 s
+    at 4. The small-input floor of the Python stages
+    (:data:`PYTHON_STAGE_MIN_PARTITIONS`) keeps the same rule.
     """
     cores = cores or default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.default.parallelism", str(max(cores, 8)))
+        .config("spark.sql.shuffle.partitions", str(cores))
+        .config("spark.default.parallelism", str(cores))
         # --- AQE: the batch skew layer (Reshape-equivalent) ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -136,15 +152,13 @@ PYTHON_STAGE_TASK_BYTES = int(
 #: scheduler's task slots, if there are fewer): a wrong-low optimizer
 #: estimate (post-filter selectivity guesses) must not serialize a
 #: genuinely heavy Python stage — 1-2 partitions is the exact failure
-#: the pin exists to prevent. The floor is ``min(this, task_slots)``
-#: because every Python task pays a fixed worker setup cost whatever
-#: its input: about 0.07 s per task for a trivial ``mapInPandas`` on a
-#: 4-core box (64 tasks on 4 slots). The CPython 3.11 zipimport
-#: directory re-read that ``setup_spark_files`` used to add to every
-#: task (0.30 s per task on the same probe) is now paid once per worker
-#: daemon (:mod:`reshape_on_flink_spark.pydaemon`). A floor above the
-#: slot count adds no parallelism, only a second wave of that fixed
-#: cost: 8 tasks on 4 slots run as two waves.
+#: the pin exists to prevent. The floor is ``min(this, task_slots)`` by
+#: the one-wave rule of :func:`get_spark`: every Python task pays a
+#: fixed worker setup cost whatever its input, about 0.07 s per task
+#: for a trivial ``mapInPandas`` on a 4-core box now that the CPython
+#: 3.11 zipimport re-read is paid once per worker daemon
+#: (:mod:`reshape_on_flink_spark.pydaemon`), so tasks beyond the slots
+#: only add a second wave of it.
 PYTHON_STAGE_MIN_PARTITIONS = int(
     os.environ.get("RESHAPE_PY_STAGE_MIN_PARTITIONS", 8)
 )
@@ -197,14 +211,9 @@ def repartition_for_python_stage(
     plan/flag/numpy setup, measured 1.2-1.9x faster at sf0.1 when the
     fan-out tracks input size) pass ``task_bytes`` to additionally cap
     the width at ``ceil(estimated_bytes / task_bytes)``, floored at
-    ``min(PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark))``. The floor
-    never exceeds the task slots because each Python task pays a fixed
-    worker setup (about 0.07 s per task on 4 cores, see
-    :data:`PYTHON_STAGE_MIN_PARTITIONS`; the CPython 3.11 zipimport
-    re-read is now paid once per worker daemon, not per task); on 4
-    slots a floor of 8 ran every small stage as two waves of that cost
-    and bought no parallelism, so a small stage now runs in one
-    wave. The cap self-removes at scale
+    ``min(PYTHON_STAGE_MIN_PARTITIONS, task_slots(spark))``, so a small
+    stage runs in one wave (the one-wave rule of :func:`get_spark`;
+    see :data:`PYTHON_STAGE_MIN_PARTITIONS`). The cap self-removes at scale
     (a 10x input estimate re-opens the full configured width) and on
     estimate failure (unknown/huge sizeInBytes ⇒ full width), so it is
     a small-input overhead bound, not a parallelism limit. Stages whose
@@ -307,7 +316,13 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     task (see :data:`PYTHON_STAGE_MIN_PARTITIONS`). The codegen cache
     size is static too: such a session keeps Spark's 100 entries
     instead of :data:`CODEGEN_CACHE_ENTRIES`, so queries that alternate
-    recompile their generated classes more often.
+    recompile their generated classes more often. Such a session also
+    keeps its own ``spark.sql.shuffle.partitions`` (Spark's default is
+    200), which is left as the caller set it: batch shuffles still
+    coalesce under AQE, but a stateful stream started on it fixes that
+    many state partitions at query start, so each micro-batch of its
+    keyed-state stage runs 200 tasks instead of one wave of the task
+    slots (see :func:`get_spark`).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

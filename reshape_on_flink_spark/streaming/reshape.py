@@ -201,11 +201,12 @@ def keyed_process_agg(
     worker setup, not a per-row replay: about 0.07 s per task on 4
     cores, now that the CPython 3.11 zipimport re-read is paid once per
     worker daemon (``session.PYTHON_STAGE_MIN_PARTITIONS``). Pinned to
-    ``spark.sql.shuffle.partitions`` (8 on 4 cores) every micro-batch
-    paid that setup in two waves; capped, a small micro-batch runs in
-    one wave of at most ``task_slots`` tasks. A large micro-batch's
-    estimate re-opens the configured width, so salting still spreads
-    a hot key over reducers at scale.
+    ``spark.sql.shuffle.partitions`` every micro-batch would pay that
+    setup once per configured partition (200 on a caller's vanilla
+    session); capped, a small micro-batch runs in one wave of at most
+    ``task_slots`` tasks. A large micro-batch's estimate re-opens the
+    configured width, so salting still spreads a hot key over reducers
+    at scale.
     """
     import pandas as pd
 

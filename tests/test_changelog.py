@@ -1599,6 +1599,72 @@ def test_python_stage_floor_capped_at_task_slots(spark, monkeypatch):
         assert got == min(n_conf, want), (slots, got)
 
 
+_STATE_WIDTH_SCRIPT = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from reshape_on_flink_spark.session import get_spark, task_slots
+from reshape_on_flink_spark.streaming.changelog import join_changelog
+from reshape_on_flink_spark.streaming.source import chunked_replay
+
+spark = get_spark("state_width", cores=2, extra_confs={"spark.driver.memory": "1g"})
+left = spark.createDataFrame(
+    [(k % 5, "+I", k, k) for k in range(20)],
+    "k long, _change_type string, v long, oseq long",
+)
+right = spark.createDataFrame(
+    [(k, "+I", 10 * k, -1) for k in range(5)],
+    "k long, _change_type string, w long, oseq long",
+)
+base = sys.argv[2]
+ls = chunked_replay(spark, left, os.path.join(base, "l"), n_chunks=2, order_col="oseq")
+rs = chunked_replay(spark, right, os.path.join(base, "r"), n_chunks=1, order_col="oseq")
+q = (
+    join_changelog(ls, rs, "k", "inner", order_by="oseq")
+    .writeStream.format("memory").queryName("state_width")
+    .outputMode("append")
+    .option("checkpointLocation", os.path.join(base, "ckpt"))
+    .start()
+)
+q.processAllAvailable()
+progress = q.lastProgress
+q.stop()
+print(json.dumps({
+    "slots": task_slots(spark),
+    "conf": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    "state": progress["stateOperators"][0]["numShufflePartitions"],
+    "rows": spark.table("state_width").count(),
+}))
+spark.stop()
+"""
+
+
+def test_state_stage_runs_one_wave_below_eight_slots(tmp_path):
+    """A session narrower than 8 slots starts its keyed-state stages at
+    the slot count: the stream's state partitions are fixed from
+    ``spark.sql.shuffle.partitions`` when the query starts and are never
+    coalesced, so a wider setting would run every micro-batch in two
+    waves. The shared test session is ``local[8]``, where both agree,
+    so this runs its own 2-core session."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "state_width.py"
+    script.write_text(_STATE_WIDTH_SCRIPT)
+    proc = subprocess.run(
+        [sys.executable, str(script), repo, str(tmp_path / "data")],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["slots"] == 2
+    assert out["conf"] == out["slots"]
+    assert out["state"] == out["slots"]
+    assert out["rows"] == 20
+
+
 def test_retractable_topn_order_by_list_equals_synthetic_seq(spark):
     """order_by=[cols...] (composite replay order) must replay exactly
     like the old single synthetic sequence column built by a ROW_NUMBER
